@@ -26,15 +26,22 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .ccf import _undirected
+from .checkpointing import fixed_point, release, row_count
 
 # How many Bellman-Ford relaxations the sssp loops chain LAZILY between
-# materialization barriers (eager localCheckpoint + convergence count).
+# materialization barriers (``fixed_point``'s ``barrier_every``: one
+# localCheckpoint + the convergence count per barrier).
 # 1 reproduces the classic one-barrier-per-round loop bit-for-bit; the
 # batched loop is result-identical for any value because relaxation is
 # monotone and a no-op at the fixed point (argument inline at the loop).
 # Scale-neutral: the knob trades lineage depth between checkpoints
 # against per-round scheduling + state-write cost, not data volume.
 _RELAX_PER_BARRIER = 2
+
+
+def _whole_batches(rounds: int) -> int:
+    """``rounds`` rounded up to whole ``_RELAX_PER_BARRIER`` batches."""
+    return -(-rounds // _RELAX_PER_BARRIER) * _RELAX_PER_BARRIER
 
 
 def canonical_pairs(edges: DataFrame) -> DataFrame:
@@ -107,14 +114,14 @@ def bfs_hops(
     Round-12 restructure (guide §1.2 step 1 — the sssp batching
     pattern): the loop keeps ONE state table, ``visited(node, hop)``
     (the frontier is just its newest hop slice), chains
-    ``_RELAX_PER_BARRIER`` levels LAZILY between eager checkpoints,
-    and checks termination on the batch's LAST level (an empty
-    frontier stays empty, so mid-batch levels past exhaustion emit
-    nothing and the result is row-identical — the old loop's
-    per-level break only saved empty-join work). Two actions per
-    TWO levels instead of two per level; the adjacency is pinned
-    once (an unpinned subtree re-ran scan+canonicalize+expand per
-    level — cross-action jobs never reuse shuffles).
+    ``_RELAX_PER_BARRIER`` levels LAZILY between barriers, and checks
+    termination on the batch's LAST level (an empty frontier stays
+    empty, so mid-batch levels past exhaustion emit nothing and the
+    result is row-identical — the old loop's per-level break only
+    saved empty-join work). One action per TWO levels instead of two
+    per level; the adjacency is pinned once (an unpinned subtree
+    re-ran scan+canonicalize+expand per level — cross-action jobs
+    never reuse shuffles).
     """
     und = canonical_undirected(edges).localCheckpoint(eager=True)
     seed_rows = seeds.select("node").distinct().withColumn(
@@ -123,48 +130,65 @@ def bfs_hops(
     return _bfs_hops_on(und, seed_rows, max_hops)
 
 
+def _grow_levels(
+    state: DataFrame,
+    expand,
+    max_levels: int,
+    barrier_every: int = 1,
+) -> tuple[DataFrame, int]:
+    """Level-synchronous growth on ``fixed_point``: ``state`` rows
+    carry a ``hop`` column, and ``expand(cur, h)`` returns the rows of
+    hop ``h + 1`` (in ``state``'s column order) computed from ``cur``.
+    Each barrier's measure counts its newest level; the loop stops at
+    the first empty one (an empty level stays empty, so levels chained
+    past exhaustion add nothing) or after ``max_levels``. Returns the
+    accumulated table and (exact for ``barrier_every=1``) the number of
+    non-empty levels, hop 0 included."""
+    hop = 0
+
+    def step(cur: DataFrame) -> DataFrame:
+        nonlocal hop
+        hop += 1
+        return cur.unionAll(expand(cur, hop - 1))
+
+    state, steps, converged, _ = fixed_point(
+        state,
+        step,
+        max_steps=max_levels,
+        barrier_every=barrier_every,
+        measure=lambda g: row_count(g.where(F.col("hop") == hop)),
+        converged=lambda _prev, n_new: n_new == 0,
+    )
+    return state, steps + 1 - converged
+
+
 def _bfs_hops_on(
-    und: DataFrame, seed_rows: DataFrame, max_hops: int
+    und: DataFrame,
+    seed_rows: DataFrame,
+    max_hops: int,
+    keys: tuple[str, ...] = (),
+    barrier_every: int = _RELAX_PER_BARRIER,
 ) -> DataFrame:
     """BFS core over a PREBUILT (checkpointed) bidirectional (src,
     dst) adjacency — callers that run several sweeps on one graph
     (cc_diameter_estimate's double sweep) build the adjacency once.
-    ``seed_rows`` must be (node, hop=0)."""
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
+    ``seed_rows`` must be (*keys, node, hop=0); ``keys`` run one
+    independent BFS per key value in the same frontier loop (the
+    per-seed formulation's ``seed``)."""
 
-    visited = seed_rows.localCheckpoint(eager=True)
-    frontier = visited
-    cycler = CheckpointCycler(und.sparkSession)
-    b = _RELAX_PER_BARRIER
-    h = 0
-    while h < max_hops:
-        take = min(b, max_hops - h)
-        cur = visited
-        for j in range(1, take + 1):
-            frontier = (
-                und.join(
-                    frontier.select(F.col("node").alias("src")),
-                    "src",
-                    "inner",
-                )
-                .select(F.col("dst").alias("node"))
-                .distinct()
-                .join(cur.select("node"), "node", "left_anti")
-                .withColumn("hop", F.lit(h + j))
-            )
-            cur = cur.unionAll(frontier)
-        visited = cur.localCheckpoint(eager=True)
-        h += take
-        # rebind the next batch's frontier to the MATERIALIZED slice
-        # (the lazy `frontier` above would re-run its subtree)
-        frontier = visited.where(F.col("hop") == h).select("node")
-        done = not visited.where(F.col("hop") == h).take(1)
-        cycler.cycle(visited)
-        if done:
-            break
-    return visited
+    def expand(cur: DataFrame, h: int) -> DataFrame:
+        frontier = cur.where(F.col("hop") == h).select(
+            *keys, F.col("node").alias("src")
+        )
+        return (
+            und.join(frontier, "src")
+            .select(*keys, F.col("dst").alias("node"))
+            .distinct()
+            .join(cur.select(*keys, "node"), [*keys, "node"], "left_anti")
+            .withColumn("hop", F.lit(h + 1))
+        )
+
+    return _grow_levels(seed_rows, expand, max_hops, barrier_every)[0]
 
 
 def pagerank_int(
@@ -210,10 +234,6 @@ def pagerank_int(
     teleport = (15 * init) // 100
     ranks = deg.select("node", F.lit(init).alias("rank"))
 
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
     def _step(cur: DataFrame) -> DataFrame:
         contribs = (
             cur.join(deg, "node")
@@ -230,21 +250,11 @@ def pagerank_int(
             )
         )
 
-    # deg is loop-invariant and must survive every round: the cycler
-    # only ever frees ids claimed through cycle(df), so it is safe
-    cycler = CheckpointCycler(edges.sparkSession)
-    b = _RELAX_PER_BARRIER
-    done = 0
-    while done < iterations:
-        take = min(b, iterations - done)
-        for _ in range(take):
-            ranks = _step(ranks)
-        ranks = ranks.localCheckpoint(eager=True)
-        done += take
-        # the previous barrier's ranks are dead once this one is
-        # materialized; the final barrier is never released
-        cycler.cycle(ranks)
-    return ranks
+    # deg is loop-invariant and must survive every round: the driver
+    # only ever frees its own barriers, so it is safe
+    return fixed_point(
+        ranks, _step, max_steps=iterations, barrier_every=_RELAX_PER_BARRIER
+    )[0]
 
 
 def label_propagation(edges: DataFrame, rounds: int = 2) -> DataFrame:
@@ -277,10 +287,6 @@ def label_propagation(edges: DataFrame, rounds: int = 2) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
     # round 12: the adjacency feeds the init distinct plus every
     # round's join — checkpoint it once instead of re-deriving the
     # scan->canonicalize->expand subtree per consumer
@@ -308,19 +314,9 @@ def label_propagation(edges: DataFrame, rounds: int = 2) -> DataFrame:
     # round 12: two rounds per barrier (same batching as pagerank_int
     # — the synchronous update is a pure function of the previous
     # labels, so barrier frequency cannot change the result)
-    cycler = CheckpointCycler(edges.sparkSession)
-    b = _RELAX_PER_BARRIER
-    done = 0
-    while done < rounds:
-        take = min(b, rounds - done)
-        for _ in range(take):
-            labels = _round(labels)
-        labels = labels.localCheckpoint(eager=True)
-        done += take
-        # previous barrier's labels are dead once this one is
-        # materialized; the final barrier is never released
-        cycler.cycle(labels)
-    return labels
+    return fixed_point(
+        labels, _round, max_steps=rounds, barrier_every=_RELAX_PER_BARRIER
+    )[0]
 
 
 def _wedge_shuffle_partitions(oriented: DataFrame) -> int:
@@ -431,38 +427,28 @@ def k_core(
     ``edges`` is an undirected edge list (first two columns used);
     self-loops and duplicates are removed.
     """
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
     cur = canonical_undirected(edges)
-    n_cur = cur.count()
-    cycler = CheckpointCycler(edges.sparkSession)
-    for _ in range(max_iterations):
-        if n_cur == 0:
-            break
+    n_start = cur.count()
+
+    def peel(cur: DataFrame) -> DataFrame:
         deg = cur.groupBy("src").agg(F.count("*").alias("deg"))
         keep = deg.where(F.col("deg") >= k).select("src")
-        nxt = (
-            cur.join(keep, "src", "left_semi")
-            .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
-            .localCheckpoint(eager=False)
+        return cur.join(keep, "src", "left_semi").join(
+            keep.withColumnRenamed("src", "dst"), "dst", "left_semi"
         )
-        n_nxt = nxt.count()
-        if n_nxt == n_cur:
-            # `cur` (the previous generation) is the result here — it
-            # was NOT cycled past, so its blocks are still live
-            break
-        cur, n_cur = nxt, n_nxt
-        # committed to advancing: the generation before `nxt` is dead
-        cycler.cycle(cur)
-    if n_cur == 0:
-        return cur.groupBy("src").agg(
-            F.count("*").alias("deg")
-        ).select(F.col("src").alias("node"), "deg")
-    return cur.groupBy("src").agg(F.count("*").cast("long").alias("deg")).select(
-        F.col("src").alias("node"), "deg"
-    )
+
+    # peeling only shrinks the edge set, so an unchanged count is an
+    # unchanged set: the just-materialized generation IS the core
+    core = fixed_point(
+        cur,
+        peel,
+        max_steps=max_iterations if n_start else 0,
+        converged=lambda prev, n: n == 0
+        or n == (n_start if prev is None else prev),
+    )[0]
+    return core.groupBy("src").agg(
+        F.count("*").cast("long").alias("deg")
+    ).select(F.col("src").alias("node"), "deg")
 
 
 def bounded_sssp(
@@ -484,18 +470,14 @@ def bounded_sssp(
 
     Per round: one shuffle join (dist hash-partitioned on node, edges
     on src — the partitioning is reused round over round) + one
-    partial+final min aggregate + one eager localCheckpoint, with the
-    previous round's blocks freed by the CheckpointCycler. Hub skew
+    partial+final min aggregate + one ``fixed_point`` barrier, with the
+    previous round's blocks freed by the driver. Hub skew
     lands in the JOIN, which AQE can split — this loop has no window
     formulation to outgrow. Bounded rounds is the production contract
     for 100 TB graphs: distances stabilize within graph diameter,
     and each round's cost is one edge-list join regardless of round
     number.
     """
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
     e = edges.select(
         F.col(edges.columns[0]).alias("src"),
         F.col(edges.columns[1]).alias("dst"),
@@ -506,23 +488,21 @@ def bounded_sssp(
         .distinct()
         .withColumn("dist", F.lit(0).cast("long"))
     )
-    cycler = CheckpointCycler(edges.sparkSession)
-    for _ in range(rounds):
+
+    def relax(dist: DataFrame) -> DataFrame:
         cand = dist.join(
             e.withColumnRenamed("src", "node"), "node"
         ).select(
             F.col("dst").alias("node"),
             (F.col("dist") + F.col("w")).alias("dist"),
         )
-        dist = (
+        return (
             dist.unionAll(cand)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-        ).localCheckpoint(eager=True)
-        # previous round's distances are dead once this round's are
-        # materialized (eager checkpoint); final round backs the result
-        cycler.cycle(dist)
-    return dist
+        )
+
+    return fixed_point(dist, relax, max_steps=rounds)[0]
 
 
 def clustering_coefficient(edges: DataFrame) -> DataFrame:
@@ -595,7 +575,7 @@ def personalized_pagerank_int(
     loop — bit-for-bit.
 
     Scale shape: same as pagerank_int — one gather shuffle per round,
-    broadcastable seed table, eager checkpoint + cycler to keep the
+    broadcastable seed table, ``fixed_point`` barriers to keep the
     plan and the block store flat. Round 12: adjacency checkpointed
     once + two iterations per barrier, exactly as in ``pagerank_int``
     (see its docstring; the update is a pure deterministic function of
@@ -620,10 +600,6 @@ def personalized_pagerank_int(
     )
     ranks = tagged.select(
         "node", F.when(is_seed, F.lit(init)).otherwise(F.lit(0)).alias("rank")
-    )
-
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
     )
 
     def _step(cur: DataFrame) -> DataFrame:
@@ -651,17 +627,9 @@ def personalized_pagerank_int(
             ).alias("rank"),
         )
 
-    cycler = CheckpointCycler(edges.sparkSession)
-    b = _RELAX_PER_BARRIER
-    done = 0
-    while done < iterations:
-        take = min(b, iterations - done)
-        for _ in range(take):
-            ranks = _step(ranks)
-        ranks = ranks.localCheckpoint(eager=True)
-        done += take
-        cycler.cycle(ranks)
-    return ranks
+    return fixed_point(
+        ranks, _step, max_steps=iterations, barrier_every=_RELAX_PER_BARRIER
+    )[0]
 
 
 def per_seed_bfs(
@@ -699,23 +667,11 @@ def per_seed_bfs(
     if k < 3 or k > 62:
         return _per_seed_bfs_rows(edges, seeds, max_hops)
 
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
     # round 12: checkpoint the adjacency once — _bfs_mask_levels joins
     # it every level, re-deriving the scan subtree per level otherwise
-    und = (
-        canonical_undirected(edges)
-        .withColumnRenamed("src", "node")
-        .localCheckpoint(eager=True)
-    )
+    und = canonical_undirected(edges).localCheckpoint(eager=True)
     seed_idx = _seed_bit_index(seed_rows)
-    cycler = CheckpointCycler(edges.sparkSession)
-    levels = _bfs_mask_levels(und, seed_idx, max_hops, cycler)
-    reached = levels[0].withColumn("hop", F.lit(0))
-    for h, lv in enumerate(levels[1:], start=1):
-        reached = reached.unionAll(lv.withColumn("hop", F.lit(h)))
+    reached = _bfs_mask_levels(und, seed_idx, max_hops)[0]
     set_bits = F.expr(
         f"filter(sequence(0, {k - 1}), "
         "i -> (shiftright(mask, i) & 1) = 1)"
@@ -764,10 +720,6 @@ def sssp_int(
     if k < 3 or k > 62:
         return _sssp_rows(weighted_edges, seeds, max_rounds)
 
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
     und = _weighted_undirected(weighted_edges).localCheckpoint(eager=True)
     seed_idx = _seed_bit_index(seed_rows)
     inf = 1 << 62
@@ -777,17 +729,17 @@ def sssp_int(
             f"transform(sequence(0, {k - 1}), "
             f"i -> CAST(IF(i = idx, 0, {inf}) AS BIGINT))"
         ).alias("d"),
-    ).localCheckpoint(eager=True)
-    cycler = CheckpointCycler(weighted_edges.sparkSession)
-    converged = False
+    )
     fill = F.expr(f"array_repeat(CAST({inf} AS BIGINT), {k})")
 
     def _relax(cur: DataFrame) -> DataFrame:
-        """One lazy relaxation: (node, od, nd) where od is ``cur``'s
-        distance array and nd the improved one. ``cur`` appears twice
-        (adjacency join + full-outer merge); its exchange is planned
-        once and reused (ReuseExchange), so chaining relaxations
-        between barriers does not re-shuffle the state per reference."""
+        """One lazy relaxation: (node, d, chg) where d is the improved
+        distance array and chg flags a row this relaxation changed.
+        ``cur`` appears twice (adjacency join + full-outer merge); its
+        exchange is planned once and reused (ReuseExchange), so
+        chaining relaxations between barriers does not re-shuffle the
+        state per reference."""
+        cur = cur.select("node", "d")
         cand = (
             und.join(cur, "node")
             .groupBy(F.col("dst").alias("node"))
@@ -821,38 +773,35 @@ def sssp_int(
                     f"IF(least(x, y) >= {inf}, {inf}, least(x, y)))"
                 ).alias("nd"),
             )
+            .select(
+                "node",
+                F.col("nd").alias("d"),
+                F.expr("exists(zip_with(od, nd, (x, y) -> y < x), b -> b)")
+                .alias("chg"),
+            )
         )
 
     # Relaxation batching (optimization round 12, guide §1.2 step 1 /
     # §5 caching notes): chain _RELAX_PER_BARRIER relaxations LAZILY
-    # between materialization barriers. Each barrier (eager
-    # localCheckpoint + convergence count) is a full write+read of the
-    # state plus two scheduled jobs; relaxation itself is monotone and
-    # idempotent at the fixed point, so batching changes NOTHING about
-    # the result — only how often the loop pays the barrier. The
-    # convergence test reads the LAST chained relaxation's change
-    # flag: zero changes there means the previous relaxation already
-    # sat at the fixed point. Budget parity: ceil(max_rounds / b)
-    # batches observe >= max_rounds relaxations, so any instance the
-    # unbatched loop could converge within budget still converges
-    # (extra relaxations past the fixed point are no-ops).
-    b = _RELAX_PER_BARRIER
-    for _r in range((max_rounds + b - 1) // b):
-        merged = _relax(dist)
-        for _j in range(b - 1):
-            merged = _relax(merged.select("node", F.col("nd").alias("d")))
-        nxt = merged.select(
-            "node",
-            F.col("nd").alias("d"),
-            F.expr("exists(zip_with(od, nd, (x, y) -> y < x), b -> b)")
-            .alias("chg"),
-        ).localCheckpoint(eager=True)
-        n_changed = nxt.where(F.col("chg")).count()
-        dist = nxt.select("node", "d")
-        cycler.cycle(nxt)
-        if n_changed == 0:
-            converged = True
-            break
+    # between materialization barriers. Each barrier is a full
+    # write+read of the state plus a scheduled job; relaxation itself
+    # is monotone and idempotent at the fixed point, so batching
+    # changes NOTHING about the result — only how often the loop pays
+    # the barrier. The convergence test reads the LAST chained
+    # relaxation's change flag: zero changes there means the previous
+    # relaxation already sat at the fixed point. Budget parity:
+    # ceil(max_rounds / b) whole batches observe >= max_rounds
+    # relaxations, so any instance the unbatched loop could converge
+    # within budget still converges (extra relaxations past the fixed
+    # point are no-ops).
+    dist, _, converged, _ = fixed_point(
+        dist,
+        _relax,
+        max_steps=_whole_batches(max_rounds),
+        barrier_every=_RELAX_PER_BARRIER,
+        measure=lambda g: row_count(g.where(F.col("chg"))),
+        converged=lambda _prev, n_changed: n_changed == 0,
+    )
     if not converged:
         raise ValueError(
             f"sssp_int did not converge within max_rounds={max_rounds}; "
@@ -898,10 +847,6 @@ def _sssp_rows(
 ) -> DataFrame:
     """(seed, node)-keyed Bellman-Ford — the general-k path (and the
     property-pin oracle for the array batch above)."""
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
     und = _weighted_undirected(weighted_edges).localCheckpoint(eager=True)
     dist = (
         seeds.select(F.col(seeds.columns[0]).alias("seed"))
@@ -911,11 +856,10 @@ def _sssp_rows(
             F.col("seed").alias("node"),
             F.lit(0).cast("long").alias("dist"),
         )
-    ).localCheckpoint(eager=True)
-    cycler = CheckpointCycler(weighted_edges.sparkSession)
-    converged = False
+    )
 
     def _relax(cur: DataFrame) -> DataFrame:
+        cur = cur.select("seed", "node", "dist")
         cand = (
             und.join(cur, "node")
             .select(
@@ -948,25 +892,21 @@ def _sssp_rows(
 
     # chained-relaxation barriers — same batching (and same result
     # identity / budget-parity argument) as the array path above
-    b = _RELAX_PER_BARRIER
-    for _r in range((max_rounds + b - 1) // b):
-        merged = _relax(dist)
-        for _j in range(b - 1):
-            merged = _relax(merged.select("seed", "node", "dist"))
-        nxt = merged.localCheckpoint(eager=True)
-        n_changed = nxt.where(F.col("chg")).count()
-        dist = nxt.select("seed", "node", "dist")
-        cycler.cycle(nxt)
-        if n_changed == 0:
-            converged = True
-            break
+    dist, _, converged, _ = fixed_point(
+        dist,
+        _relax,
+        max_steps=_whole_batches(max_rounds),
+        barrier_every=_RELAX_PER_BARRIER,
+        measure=lambda g: row_count(g.where(F.col("chg"))),
+        converged=lambda _prev, n_changed: n_changed == 0,
+    )
     if not converged:
         raise ValueError(
             f"sssp_int did not converge within max_rounds={max_rounds}; "
             "raise max_rounds (bound is the longest shortest path's "
             "edge count)"
         )
-    return dist
+    return dist.select("seed", "node", "dist")
 
 
 def _seed_bit_index(seed_rows: DataFrame) -> DataFrame:
@@ -985,29 +925,30 @@ def _bfs_mask_levels(
     und: DataFrame,
     seed_idx: DataFrame,
     max_hops: int,
-    cycler,
-) -> list[DataFrame]:
-    """Bitmask-batched BFS core: returns one (node, mask) DataFrame
-    per hop level (list index = hop; every one eagerly checkpointed
-    and RESULT-owned — the cycler only ever claims the merged
-    visited-mask scratch). ``mask`` bit i set means seed ``idx = i``
-    FIRST reached ``node`` at exactly that level."""
-    frontier = seed_idx.select(
-        F.col("seed").alias("node"),
-        F.expr("shiftleft(CAST(1 AS BIGINT), idx)").alias("mask"),
-    ).localCheckpoint(eager=True)
-    visited = frontier.withColumnRenamed("mask", "vmask")
-    levels = [frontier]
-    for _h in range(1, max_hops + 1):
+) -> tuple[DataFrame, int]:
+    """Bitmask-batched BFS core over a bidirectional (src, dst)
+    adjacency: returns ``(node, hop, mask)`` rows — ``mask`` bit i set
+    means seed ``idx = i`` FIRST reached ``node`` at exactly that hop —
+    and the number of non-empty levels (hop 0 included). The visited
+    mask of a level is the bit_or of every earlier level's rows."""
+
+    def expand(cur: DataFrame, h: int) -> DataFrame:
         cand = (
-            und.join(frontier, "node")
+            und.join(
+                cur.where(F.col("hop") == h).select(
+                    F.col("node").alias("src"), "mask"
+                ),
+                "src",
+            )
             .groupBy(F.col("dst").alias("node"))
             .agg(F.bit_or("mask").alias("cmask"))
         )
-        frontier = (
+        visited = cur.groupBy("node").agg(F.bit_or("mask").alias("vmask"))
+        return (
             cand.join(visited, "node", "left")
             .select(
                 "node",
+                F.lit(h + 1).alias("hop"),
                 F.col("cmask")
                 .bitwiseAND(
                     F.bitwise_not(
@@ -1017,56 +958,32 @@ def _bfs_mask_levels(
                 .alias("mask"),
             )
             .where(F.col("mask") != 0)
-        ).localCheckpoint(eager=True)
-        if not frontier.take(1):
-            break
-        levels.append(frontier)
-        visited = (
-            visited.unionAll(frontier.withColumnRenamed("mask", "vmask"))
-            .groupBy("node")
-            .agg(F.bit_or("vmask").alias("vmask"))
-        ).localCheckpoint(eager=True)
-        # every level's mask DataFrame is part of the RESULT — only
-        # the merged visited mask is loop-scratch the cycler may free
-        cycler.cycle(visited)
-    return levels
+        )
+
+    seeds = seed_idx.select(
+        F.col("seed").alias("node"),
+        F.lit(0).alias("hop"),
+        F.expr("shiftleft(CAST(1 AS BIGINT), idx)").alias("mask"),
+    )
+    return _grow_levels(seeds, expand, max_hops)
 
 
 def _per_seed_bfs_rows(
     edges: DataFrame, seeds: DataFrame, max_hops: int = 10
 ) -> DataFrame:
     """(seed, node)-keyed simultaneous BFS — the general-k path (and
-    the property-pin oracle for the bitmask batch above)."""
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
+    the property-pin oracle for the bitmask batch above): the
+    ``bfs_hops`` frontier loop keyed by seed, one barrier per level."""
     # round 12: same once-only adjacency checkpoint as per_seed_bfs
-    und = (
-        canonical_undirected(edges)
-        .withColumnRenamed("src", "node")
-        .localCheckpoint(eager=True)
-    )
-    frontier = (
+    und = canonical_undirected(edges).localCheckpoint(eager=True)
+    seed_rows = (
         seeds.select(F.col("node").alias("seed"))
         .distinct()
         .select("seed", F.col("seed").alias("node"), F.lit(0).alias("hop"))
-    ).localCheckpoint(eager=True)
-    visited = frontier
-    cycler = CheckpointCycler(edges.sparkSession)
-    for h in range(1, max_hops + 1):
-        frontier = (
-            und.join(frontier.select("seed", "node"), "node")
-            .select("seed", F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("seed", "node"), ["seed", "node"], "left_anti")
-            .withColumn("hop", F.lit(h))
-        ).localCheckpoint(eager=True)
-        if not frontier.take(1):
-            break
-        visited = visited.unionAll(frontier).localCheckpoint(eager=True)
-        cycler.cycle(frontier, visited)
-    return visited
+    )
+    return _bfs_hops_on(
+        und, seed_rows, max_hops, keys=("seed",), barrier_every=1
+    )
 
 
 def closeness_centrality(
@@ -1265,8 +1182,8 @@ def k_truss(
     triangle SET is orientation-invariant, so per-edge support is
     identical to an id-ordered oracle's); inner-join the supports
     back (an edge in no triangle simply has no support row = removed
-    for k >= 3). One localCheckpoint per round, previous generations
-    freed by the ownership cycler; the convergence count is the
+    for k >= 3). One ``fixed_point`` barrier per round, previous
+    generations freed by the driver; the convergence count is the
     round's single materializing action.
 
     Returns (src, dst, support) for the surviving edges; at the fixed
@@ -1274,19 +1191,18 @@ def k_truss(
     the truss itself. Raises if k < 3 (k-truss is defined from 3)."""
     if k < 3:
         raise ValueError(f"k_truss needs k >= 3, got {k}")
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
+    start = canonical_pairs(edges).localCheckpoint(eager=False)
+    n_start = start.count()
+    scratch: list[DataFrame] = []
 
-    cycler = CheckpointCycler(edges.sparkSession)
-    cur = canonical_pairs(edges).localCheckpoint(eager=True)
-    n_cur = cur.count()
-    cycler.cycle(cur)
-    kept = cur.withColumn("support", F.lit(0).cast("long")).where(
-        F.lit(n_cur == 0)
-    )
-    for _ in range(max_rounds):
+    def peel(cur: DataFrame) -> DataFrame:
+        cur = cur.select("src", "dst")
+        # the previous round's oriented edges fed only its kept set,
+        # which the driver has materialized before calling again
+        if scratch:
+            release(scratch.pop())
         oriented = degree_oriented_edges(cur).localCheckpoint(eager=False)
+        scratch.append(oriented)
         # volume-size the round's wedge join and support agg: the
         # first co-purchase round emits ~49M wedges at sf0.1, which
         # OOMs a session-default 8-partition exchange on a 1 GB heap
@@ -1312,20 +1228,17 @@ def k_truss(
         ).agg(
             F.count("*").cast("long").alias("support")
         )
-        kept = (
-            cur.join(sup, ["src", "dst"])
-            .where(F.col("support") >= k - 2)
-            .localCheckpoint(eager=False)
+        return cur.join(sup, ["src", "dst"]).where(
+            F.col("support") >= k - 2
         )
-        n_new = kept.count()
-        # this round's oriented subtree is dead once kept materialized;
-        # claim both so the next cycle() frees them together
-        cycler.cycle(kept, oriented)
-        if n_new == n_cur:
-            break
-        cur = kept.select("src", "dst")
-        n_cur = n_new
-    else:
+
+    kept, _, converged, _ = fixed_point(
+        start,
+        peel,
+        max_steps=max_rounds,
+        converged=lambda prev, n: n == (n_start if prev is None else prev),
+    )
+    if not converged:
         # exhausting the budget without a fixed point would return
         # supports computed against a larger edge set — an invalid
         # truss indistinguishable from a correct one; fail loudly
@@ -1334,6 +1247,7 @@ def k_truss(
             "raise max_rounds (peeling cascades can be long on chains "
             "of dependent triangles)"
         )
+    release(start, *scratch)
     return kept.select("src", "dst", "support")
 
 
@@ -1354,9 +1268,10 @@ def shortest_path_counts(
     is one join of the previous level against the adjacency list plus
     a semi-join against the level's distance slice — path counts flow
     only along strictly-forward BFS edges, which is what makes the
-    count well-defined. Per level: one shuffle on (seed, node) +
-    checkpoint; generations released by the ownership cycler (the
-    dist table is loop-invariant and never claimed).
+    count well-defined. Per level: one shuffle on (seed, node) + one
+    ``fixed_point`` barrier over the accumulated level table;
+    generations released by the driver (the dist table is
+    loop-invariant and never claimed).
 
     int64 bound: counts grow at most (max out-degree)^max_hops —
     callers pick max_hops so the product stays far inside int64 (the
@@ -1382,32 +1297,18 @@ def shortest_path_counts(
     if k < 3 or k > 62:
         return _shortest_path_counts_rows(edges, seeds, max_hops)
 
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
-    und = (
-        canonical_undirected(edges)
-        .withColumnRenamed("src", "node")
-        .localCheckpoint(eager=True)
-    )
+    und = canonical_undirected(edges).localCheckpoint(eager=True)
     seed_idx = _seed_bit_index(seed_rows)
-    mask_cycler = CheckpointCycler(edges.sparkSession)
-    masks = _bfs_mask_levels(und, seed_idx, max_hops, mask_cycler)
+    masks, n_levels = _bfs_mask_levels(und, seed_idx, max_hops)
 
-    # counts_0: the seed's own element is 1 (one zero-length path)
-    cnt = seed_idx.select(
-        F.col("seed").alias("node"),
-        F.expr(
-            f"transform(sequence(0, {k - 1}), "
-            "i -> CAST(IF(i = idx, 1, 0) AS BIGINT))"
-        ).alias("cnt"),
-    ).localCheckpoint(eager=True)
-    per_level = [cnt]
-    cycler = CheckpointCycler(edges.sparkSession)
-    for t in range(1, len(masks)):
+    def gather(cur: DataFrame, h: int) -> DataFrame:
         gathered = (
-            und.join(cnt, "node")
+            und.join(
+                cur.where(F.col("hop") == h).select(
+                    F.col("node").alias("src"), "cnt"
+                ),
+                "src",
+            )
             .groupBy(F.col("dst").alias("node"))
             .agg(
                 *[
@@ -1420,34 +1321,37 @@ def shortest_path_counts(
                 F.array(*[f"c{i}" for i in range(k)]).alias("cnt"),
             )
         )
-        cnt = (
-            gathered.join(masks[t], "node")
-            .select(
-                "node",
-                F.expr(
-                    f"transform(sequence(0, {k - 1}), "
-                    "i -> IF((shiftright(mask, i) & 1) = 1, "
-                    "element_at(cnt, i + 1), CAST(0 AS BIGINT)))"
-                ).alias("cnt"),
-            )
-        ).localCheckpoint(eager=True)
-        if not cnt.take(1):
-            break
-        per_level.append(cnt)
-        # per-level count tables are RESULT pieces; nothing to cycle
-        # (the masks are owned by mask_cycler and stay live)
-    out = None
-    for t, lvl in enumerate(per_level):
-        rows = (
-            lvl.select(
-                "node", F.posexplode("cnt").alias("idx", "n_paths")
-            )
-            .where(F.col("n_paths") > 0)
-            .withColumn("hop", F.lit(t).cast("long"))
+        return gathered.join(
+            masks.where(F.col("hop") == h + 1).select("node", "mask"),
+            "node",
+        ).select(
+            "node",
+            F.lit(h + 1).alias("hop"),
+            F.expr(
+                f"transform(sequence(0, {k - 1}), "
+                "i -> IF((shiftright(mask, i) & 1) = 1, "
+                "element_at(cnt, i + 1), CAST(0 AS BIGINT)))"
+            ).alias("cnt"),
         )
-        out = rows if out is None else out.unionAll(rows)
+
+    # counts_0: the seed's own element is 1 (one zero-length path)
+    seeds_cnt = seed_idx.select(
+        F.col("seed").alias("node"),
+        F.lit(0).alias("hop"),
+        F.expr(
+            f"transform(sequence(0, {k - 1}), "
+            "i -> CAST(IF(i = idx, 1, 0) AS BIGINT))"
+        ).alias("cnt"),
+    )
+    counts = _grow_levels(seeds_cnt, gather, n_levels - 1)[0]
     return (
-        out.join(F.broadcast(seed_idx), "idx")
+        counts.select(
+            "node",
+            F.col("hop").cast("long").alias("hop"),
+            F.posexplode("cnt").alias("idx", "n_paths"),
+        )
+        .where(F.col("n_paths") > 0)
+        .join(F.broadcast(seed_idx), "idx")
         .select("seed", "node", "hop", F.col("n_paths").cast("long").alias("n_paths"))
     )
 
@@ -1457,43 +1361,38 @@ def _shortest_path_counts_rows(
 ) -> DataFrame:
     """(seed, node)-keyed sigma DP — the general-k path (and the
     property-pin oracle for the array batch above)."""
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
     # pin the adjacency: it feeds EVERY DP level's join, and without
     # the checkpoint each level re-runs canonical_pairs' dedup shuffle
-    und = (
-        canonical_undirected(edges)
-        .withColumnRenamed("src", "node")
-        .localCheckpoint(eager=True)
-    )
-    dist = per_seed_bfs(edges, seeds, max_hops).localCheckpoint(eager=True)
+    und = canonical_undirected(edges).localCheckpoint(eager=True)
+    # the BFS result is its loop's final (pinned) generation
+    dist = per_seed_bfs(edges, seeds, max_hops)
 
-    level = (
+    def gather(cur: DataFrame, h: int) -> DataFrame:
+        return (
+            und.join(
+                cur.where(F.col("hop") == h).select(
+                    "seed", F.col("node").alias("src"), "n_paths"
+                ),
+                "src",
+            )
+            .select("seed", F.col("dst").alias("node"), "n_paths")
+            .join(
+                dist.where(F.col("hop") == h + 1).select("seed", "node"),
+                ["seed", "node"],
+                "left_semi",
+            )
+            .groupBy("seed", "node")
+            .agg(F.sum("n_paths").cast("long").alias("n_paths"))
+            .withColumn("hop", F.lit(h + 1).cast("long"))
+        )
+
+    level0 = (
         dist.where(F.col("hop") == 0)
         .select("seed", "node")
         .withColumn("n_paths", F.lit(1).cast("long"))
-    ).localCheckpoint(eager=True)
-    out = level.withColumn("hop", F.lit(0).cast("long"))
-    cycler = CheckpointCycler(edges.sparkSession)
-    for t in range(1, max_hops + 1):
-        nxt_nodes = dist.where(F.col("hop") == t).select("seed", "node")
-        level = (
-            und.join(level, "node")
-            .select("seed", F.col("dst").alias("node"), "n_paths")
-            .join(nxt_nodes, ["seed", "node"], "left_semi")
-            .groupBy("seed", "node")
-            .agg(F.sum("n_paths").cast("long").alias("n_paths"))
-        ).localCheckpoint(eager=True)
-        if not level.take(1):
-            break
-        out = out.unionAll(
-            level.withColumn("hop", F.lit(t).cast("long"))
-        ).localCheckpoint(eager=True)
-        # previous level + previous accumulated union are dead; dist
-        # stays live (never claimed by the cycler)
-        cycler.cycle(level, out)
+        .withColumn("hop", F.lit(0).cast("long"))
+    )
+    out = _grow_levels(level0, gather, max_hops)[0]
     return out.select("seed", "node", "hop", "n_paths")
 
 
@@ -1515,8 +1414,9 @@ def pagerank_weighted_int(
     positive integer weights; expanded to both orientations here.
 
     Per iteration: one map-side join against the weighted adjacency
-    (co-partitioned on the rank key) + one gather shuffle + an eager
-    checkpoint; previous generations released by the cycler. Round 12:
+    (co-partitioned on the rank key) + one gather shuffle + a
+    ``fixed_point`` barrier; previous generations released by the
+    driver. Round 12:
     adjacency checkpointed once + two iterations per barrier, exactly
     as in ``pagerank_int`` (deterministic update — only barrier
     frequency changes)."""
@@ -1539,10 +1439,6 @@ def pagerank_weighted_int(
     teleport = (15 * init) // 100
     ranks = wdeg.select("node", F.lit(init).alias("rank"))
 
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
     def _step(cur: DataFrame) -> DataFrame:
         contribs = (
             cur.join(wdeg, "node")
@@ -1559,17 +1455,9 @@ def pagerank_weighted_int(
             )
         )
 
-    cycler = CheckpointCycler(weighted_edges.sparkSession)
-    bb = _RELAX_PER_BARRIER
-    done = 0
-    while done < iterations:
-        take = min(bb, iterations - done)
-        for _ in range(take):
-            ranks = _step(ranks)
-        ranks = ranks.localCheckpoint(eager=True)
-        done += take
-        cycler.cycle(ranks)
-    return ranks
+    return fixed_point(
+        ranks, _step, max_steps=iterations, barrier_every=_RELAX_PER_BARRIER
+    )[0]
 
 
 def _directed_simple_edges(edges: DataFrame) -> DataFrame:
@@ -1594,21 +1482,14 @@ def _min_reach_labels(
     node that can REACH v along edge direction. Bellman-Ford-style:
     every round joins the full edge set to the current labels (the
     standard distributed-coloring cost; rounds = directed diameter).
-    One lazy checkpoint + one counting action per round; generations
-    released through the ownership cycler. The returned labels ride
-    the final checkpoint — the caller owns (and should release) it.
+    One ``fixed_point`` barrier + counting action per batch of rounds;
+    generations released by the driver. The returned labels ride the
+    final barrier — the caller owns (and should release) it.
     """
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
-    cycler = CheckpointCycler(edges.sparkSession)
-    labels = nodes.select(
-        "node", F.col("node").alias("lbl")
-    ).localCheckpoint(eager=True)
-    cycler.cycle(labels)
+    labels = nodes.select("node", F.col("node").alias("lbl"))
 
     def _round(cur: DataFrame) -> DataFrame:
+        cur = cur.select("node", "lbl")
         incoming = (
             edges.join(
                 cur.select(F.col("node").alias("src"), "lbl"), "src"
@@ -1626,22 +1507,18 @@ def _min_reach_labels(
     # round 12: _RELAX_PER_BARRIER rounds chained lazily per barrier +
     # count — the sssp batching argument verbatim (monotone min update,
     # idempotent at the fixed point; a zero-change LAST round proves
-    # the previous one already converged, and ceil(max_iters/b)
-    # batches observe >= max_iters rounds)
-    b = _RELAX_PER_BARRIER
-    it = 0
-    while it < max_iters:
-        take = min(b, max_iters - it)
-        merged = _round(labels)
-        for _ in range(take - 1):
-            merged = _round(merged.select("node", "lbl"))
-        nxt = merged.localCheckpoint(eager=False)
-        n_changed = nxt.where(F.col("_chg")).count()
-        cycler.cycle(nxt)
-        labels = nxt.select("node", "lbl")
-        it += take
-        if n_changed == 0:
-            return labels
+    # the previous one already converged, and the budget is exactly
+    # max_iters rounds)
+    labels, _, converged, _ = fixed_point(
+        labels,
+        _round,
+        max_steps=max_iters,
+        barrier_every=_RELAX_PER_BARRIER,
+        measure=lambda g: row_count(g.where(F.col("_chg"))),
+        converged=lambda _prev, n_changed: n_changed == 0,
+    )
+    if converged:
+        return labels.select("node", "lbl")
     raise ValueError(
         f"min-label propagation did not converge within {max_iters} "
         "iterations — raise max_iters (rounds track the directed "
@@ -1755,19 +1632,14 @@ def strongly_connected_components_directed(
 
     All propagation is equi-joins + partial/final min-aggs (never a
     collect, never a cross join); per-round state rides one
-    localCheckpoint generation, released by the ownership cycler.
+    localCheckpoint generation, released as soon as the next one is
+    materialized.
     The emitted result pieces are separate pinned checkpoints (they
     are the return value; bounded by total node count). Raises — not
     returns a partial decomposition — if ``max_rounds`` peels don't
     dissolve the graph (worst case is a chain of SCCs; each round
     peels at least one full SCC plus every trimmable node).
     """
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-        _unpersist_rdds,
-        checkpoint_rdd_ids,
-    )
-
     spark = edges.sparkSession
     if local_threshold is not None:
         simple = _directed_simple_edges(edges)
@@ -1806,12 +1678,14 @@ def strongly_connected_components_directed(
         .localCheckpoint(eager=True)
     )
     pieces: list[DataFrame] = []
-    outer = CheckpointCycler(spark)
-    outer.cycle(cur, nodes)
     n_nodes = nodes.count()
 
+    # the peel stays a hand-rolled loop: its state is two tables
+    # (edges, nodes), each round picks a trim or a color step from a
+    # count, and a color step nests two fixed points
     def shrink(done: DataFrame) -> None:
-        """Commit a peeled piece: next node/edge generations, cycled."""
+        """Commit a peeled piece: next node/edge generations; the
+        previous pair is released once the new one is materialized."""
         nonlocal cur, nodes
         new_nodes = nodes.join(
             done.select("node"), "node", "left_anti"
@@ -1831,7 +1705,7 @@ def strongly_connected_components_directed(
             .localCheckpoint(eager=False)
         )
         new_cur.count()
-        outer.cycle(new_cur, new_nodes)
+        release(cur, nodes)
         nodes, cur = new_nodes, new_cur
 
     for _ in range(max_rounds):
@@ -1853,7 +1727,7 @@ def strongly_connected_components_directed(
             )
             n_triv = trivial.count()
             if not n_triv:
-                _unpersist_rdds(spark, checkpoint_rdd_ids(trivial))
+                release(trivial)
                 break
             pieces.append(trivial)
             shrink(trivial)
@@ -1874,9 +1748,7 @@ def strongly_connected_components_directed(
         )
         n_done = done.count()  # >= |SCC(global min)| >= 1
         # done is its own checkpoint now; f/b are dead
-        _unpersist_rdds(
-            spark, checkpoint_rdd_ids(f) | checkpoint_rdd_ids(b)
-        )
+        release(f, b)
         pieces.append(done)
         shrink(done)
         n_nodes -= n_done
@@ -1889,6 +1761,7 @@ def strongly_connected_components_directed(
                 f"max_rounds={max_rounds}; raise max_rounds (worst "
                 "case is a long chain of SCCs)"
             )
+    release(cur, nodes)
     if not pieces:
         # key-typed empty schema, matching the local fast path
         key_t = cur.schema["src"].dataType
@@ -1924,49 +1797,42 @@ def dag_longest_path_levels(
     contract for an operator whose input is supposed to be a
     condensation. ``nodes`` adds isolated vertices (level 0) the edge
     list alone cannot see. Same per-round discipline as the other
-    loops: one lazy checkpoint, one counting action, ownership-cycled
-    generations.
+    loops (``fixed_point``): one barrier, one counting action, the
+    previous generation released.
     """
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
     e = _directed_simple_edges(edges)
     node_set = e.select(F.col("src").alias("node")).unionAll(
         e.select(F.col("dst").alias("node"))
     )
     if nodes is not None:
         node_set = node_set.unionAll(nodes.select("node"))
-    cycler = CheckpointCycler(edges.sparkSession)
-    levels = (
-        node_set.distinct()
-        .select("node", F.lit(0).cast("long").alias("level"))
-        .localCheckpoint(eager=True)
+    levels = node_set.distinct().select(
+        "node", F.lit(0).cast("long").alias("level")
     )
-    cycler.cycle(levels)
-    for _ in range(max_iters):
+
+    def relax(cur: DataFrame) -> DataFrame:
+        cur = cur.select("node", "level")
         incoming = (
-            e.join(
-                levels.select(F.col("node").alias("src"), "level"), "src"
-            )
+            e.join(cur.select(F.col("node").alias("src"), "level"), "src")
             .groupBy(F.col("dst").alias("node"))
             .agg((F.max("level") + 1).alias("in_lvl"))
         )
-        nxt = (
-            levels.join(incoming, "node", "left")
-            .select(
-                "node",
-                # greatest() skips NULL (no in-edges -> keep level)
-                F.greatest("level", "in_lvl").alias("level"),
-                (F.col("in_lvl") > F.col("level")).alias("_chg"),
-            )
-            .localCheckpoint(eager=False)
+        return cur.join(incoming, "node", "left").select(
+            "node",
+            # greatest() skips NULL (no in-edges -> keep level)
+            F.greatest("level", "in_lvl").alias("level"),
+            (F.col("in_lvl") > F.col("level")).alias("_chg"),
         )
-        n_changed = nxt.where(F.col("_chg")).count()
-        cycler.cycle(nxt)
-        levels = nxt.select("node", "level")
-        if n_changed == 0:
-            return levels
+
+    levels, _, converged, _ = fixed_point(
+        levels,
+        relax,
+        max_steps=max_iters,
+        measure=lambda g: row_count(g.where(F.col("_chg"))),
+        converged=lambda _prev, n_changed: n_changed == 0,
+    )
+    if converged:
+        return levels.select("node", "level")
     raise ValueError(
         f"longest-path layering did not converge within {max_iters} "
         "rounds — the input has a cycle (not a DAG), or its depth "
@@ -1997,15 +1863,13 @@ def minimum_spanning_forest(
     rewrite the label mapping through the contraction. Component
     count at least halves per round — max_rounds=20 covers 2^20
     components; exhausting it raises rather than returning a partial
-    forest. All equi-joins and aggs; per-round state is checkpointed
-    and released through the ownership cycler. Not SQL-oracle-able at
+    forest. All equi-joins and aggs; per-round state is a
+    ``fixed_point`` generation, released when the next one is
+    materialized. Not SQL-oracle-able at
     reasonable depth (each round nests a CC fixed point), so this
     operator is property-tested against a total-order Kruskal oracle
     instead of the DuckDB gate — the documented pytest tier."""
     from map_reduce_project_spark.graph.ccf import connected_components
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
 
     c = edges.columns
     spark = edges.sparkSession
@@ -2031,32 +1895,33 @@ def minimum_spanning_forest(
         .unionAll(canon.select(F.col("dst").alias("node")))
         .distinct()
         .select("node", F.col("node").alias("comp"))
-        .localCheckpoint(eager=True)
     )
-    cycler = CheckpointCycler(spark)
-    cycler.cycle(canon, comp)
+
+    def labeled(df: DataFrame, comp: DataFrame) -> DataFrame:
+        """``df``'s edges with both endpoints' component labels."""
+        return df.join(
+            comp.select(
+                F.col("node").alias("src"), F.col("comp").alias("csrc")
+            ),
+            "src",
+        ).join(
+            comp.select(
+                F.col("node").alias("dst"), F.col("comp").alias("cdst")
+            ),
+            "dst",
+        )
+
+    def crossing(comp: DataFrame) -> DataFrame:
+        return labeled(canon, comp).where(F.col("csrc") != F.col("cdst"))
+
     pieces: list[DataFrame] = []
-    for _ in range(max_rounds):
-        labeled = (
-            canon.join(
-                comp.select(
-                    F.col("node").alias("src"), F.col("comp").alias("csrc")
-                ),
-                "src",
-            )
-            .join(
-                comp.select(
-                    F.col("node").alias("dst"), F.col("comp").alias("cdst")
-                ),
-                "dst",
-            )
-            .where(F.col("csrc") != F.col("cdst"))
-        )
-        incident = labeled.select(
+
+    def contract(cur: DataFrame) -> DataFrame:
+        comp = cur.select("node", "comp")
+        lab = crossing(comp)
+        incident = lab.select(
             F.col("csrc").alias("c"), "weight", "src", "dst"
-        ).unionAll(
-            labeled.select(F.col("cdst").alias("c"), "weight", "src", "dst")
-        )
+        ).unionAll(lab.select(F.col("cdst").alias("c"), "weight", "src", "dst"))
         winners = (
             incident.groupBy("c")
             .agg(F.min(F.struct("weight", "src", "dst")).alias("e"))
@@ -2064,58 +1929,34 @@ def minimum_spanning_forest(
             .dropDuplicates(["src", "dst"])
             .localCheckpoint(eager=False)
         )
-        if not winners.take(1):
-            break
+        # winners pieces are the RESULT — never released
         pieces.append(winners)
         # contract: CC over the winner COMPONENT graph; the CC mapping
-        # omits representatives (S3) -> coalesce to identity
-        wl = (
-            winners.join(
-                comp.select(
-                    F.col("node").alias("src"), F.col("comp").alias("csrc")
-                ),
-                "src",
-            )
-            .join(
-                comp.select(
-                    F.col("node").alias("dst"), F.col("comp").alias("cdst")
-                ),
-                "dst",
-            )
-            .select(F.col("csrc").alias("src"), F.col("cdst").alias("dst"))
+        # omits representatives (S3) -> coalesce to identity. No
+        # winners -> an empty contraction -> no label changes, which
+        # is the driver's stop
+        wl = labeled(winners, comp).select(
+            F.col("csrc").alias("src"), F.col("cdst").alias("dst")
         )
         contraction = connected_components(wl).mapping.select(
             F.col("node").alias("comp"), F.col("component").alias("newc")
         )
-        new_comp = (
-            comp.join(contraction, "comp", "left")
-            .select(
-                "node", F.coalesce("newc", F.col("comp")).alias("comp")
-            )
-            .localCheckpoint(eager=False)
+        return comp.join(contraction, "comp", "left").select(
+            "node",
+            F.coalesce("newc", F.col("comp")).alias("comp"),
+            F.col("newc").isNotNull().alias("_chg"),
         )
-        new_comp.count()
-        # winners pieces are the RESULT — never claimed, never freed
-        cycler.cycle(canon, new_comp)
-        comp = new_comp
-    else:
+
+    comp, _, converged, _ = fixed_point(
+        comp,
+        contract,
+        max_steps=max_rounds,
+        measure=lambda g: row_count(g.where(F.col("_chg"))),
+        converged=lambda _prev, n_changed: n_changed == 0,
+    )
+    if not converged:
         # if cross-component edges remain, the forest is incomplete
-        remaining = (
-            canon.join(
-                comp.select(
-                    F.col("node").alias("src"), F.col("comp").alias("csrc")
-                ),
-                "src",
-            )
-            .join(
-                comp.select(
-                    F.col("node").alias("dst"), F.col("comp").alias("cdst")
-                ),
-                "dst",
-            )
-            .where(F.col("csrc") != F.col("cdst"))
-            .count()
-        )
+        remaining = crossing(comp.select("node", "comp")).count()
         if remaining:
             raise ValueError(
                 f"Boruvka left {remaining} cross-component edges after "

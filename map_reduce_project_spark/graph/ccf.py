@@ -17,9 +17,12 @@ point. Structural wins over the reference (see SURVEY.md §3.4/§4):
 - The convergence counter is a deterministic ``count()`` aggregate on
   the new-pair branch, not an accumulator (Spark accumulators over-count
   under task retry; reference CCFConnectedComponents.scala:197).
-- One materialization per iteration via a lazy ``localCheckpoint``
-  whose convergence count is the single action — pins the iteration
-  result AND truncates lineage in ONE job. The reference's
+- One materialization per iteration (the O9 discipline): a lazy
+  ``localCheckpoint`` whose convergence count is the single action —
+  pins the iteration result AND truncates lineage in ONE job. The
+  loop itself is ``graph.checkpointing.fixed_point``, the one driver
+  every iterative operator here shares (barrier, measure, generation
+  release, reliable parquet mode, per-iteration hook). The reference's
   ``cache()+count()`` protocol (ccf_connected_components.py:219-221)
   runs two actions per iteration and leaves an ever-growing RDD DAG;
   its Python variant additionally re-executes the reduce phase twice
@@ -39,13 +42,14 @@ Semantic fine print preserved (SURVEY.md §2.4):
 
 from __future__ import annotations
 
-import os
-import time
+from contextlib import contextmanager
 from dataclasses import dataclass
-from typing import Callable
+from typing import Callable, Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .checkpointing import fixed_point, row_count
 
 MAX_ITERATIONS = 100
 
@@ -71,6 +75,63 @@ def _loop_shuffle_partitions(n_edges: int) -> int:
     sqrt_opt = (volume / _TASK_OVERHEAD_ROWS) ** 0.5
     mem_floor = volume / _MAX_ROWS_PER_PARTITION
     return max(4, min(int(max(sqrt_opt, mem_floor)) + 1, 20000))
+
+
+@contextmanager
+def _loop_shuffle_conf(
+    spark: SparkSession,
+    target: Callable[[int], int],
+    aqe_off_when_small: bool = True,
+) -> Iterator[int]:
+    """Scope a loop's shuffle sizing: set ``spark.sql.shuffle.partitions``
+    to ``target(session value)`` for the body, yield it, and restore
+    the session's partitions and AQE setting on exit.
+
+    AQE's per-stage adaptive barriers cost ~0.5s/iteration, which
+    dominates sub-second stages, so with ``aqe_off_when_small`` AQE is
+    disabled while a loop runs at <= 64 partitions and left on
+    (skew-join splitting, coalescing) at scale. A session value that
+    is not an integer raises ``ValueError`` naming the key: a sized
+    loop has nothing to size against and must not guess. Like every
+    session-conf override, this assumes one driver loop at a time.
+    """
+    sp_key = "spark.sql.shuffle.partitions"
+    aqe_key = "spark.sql.adaptive.enabled"
+    old_sp = spark.conf.get(sp_key)
+    old_aqe = spark.conf.get(aqe_key)
+    try:
+        session_sp = int(old_sp)
+    except ValueError:
+        raise ValueError(
+            f"{sp_key} must be an integer, got {old_sp!r}"
+        ) from None
+    n = target(session_sp)
+    spark.conf.set(sp_key, str(n))
+    if aqe_off_when_small and n <= 64:
+        spark.conf.set(aqe_key, "false")
+    try:
+        yield n
+    finally:
+        spark.conf.set(sp_key, old_sp)
+        spark.conf.set(aqe_key, old_aqe)
+
+
+def _public_hook(
+    on_iteration: Callable[[dict], None] | None,
+    key: str,
+    value: Callable = lambda m: m,
+) -> Callable[[dict], None] | None:
+    """Adapt a public ``on_iteration`` hook to ``fixed_point``'s dict:
+    the driver reports its raw ``measure``; the public contract names
+    it (``new_pairs`` for CCF, ``pairs`` for star)."""
+    if on_iteration is None:
+        return None
+
+    def report(info: dict) -> None:
+        info[key] = value(info.pop("measure"))
+        on_iteration(info)
+
+    return report
 
 
 @dataclass
@@ -335,6 +396,13 @@ def ccf_dedup(pairs: DataFrame) -> DataFrame:
     return pairs.dropDuplicates(["src", "dst"]).select("src", "dst")
 
 
+def _carried(pairs: DataFrame) -> DataFrame:
+    """The pair set one iteration hands to the next: a generation
+    (it carries the iterate's ``_ccf_new`` flag) is deduped; the raw
+    input is not — S5 counts duplicate input edges in iteration 1."""
+    return ccf_dedup(pairs) if _NEW in pairs.columns else pairs
+
+
 def connected_components(
     edges: DataFrame,
     use_secondary_sort: bool = False,
@@ -367,10 +435,11 @@ def connected_components(
     ``"star"``; ``reliable_checkpoint_dir`` / ``n_edges_hint`` /
     ``on_iteration`` carry over with the same contracts.
 
-    Per iteration: Iterate -> eager localCheckpoint (single job; pins the
-    result and truncates lineage) -> cheap count on the checkpointed
-    new-pair branch -> lazy dedup feeding the next pass. Stops when the
-    new-pair count is 0 (the converging iteration is counted, S4).
+    Per iteration (``fixed_point``): lazy dedup of the previous
+    generation -> Iterate -> lazy localCheckpoint whose new-pair count
+    is the single materializing job (pins the result and truncates
+    lineage). Stops when the new-pair count is 0 (the converging
+    iteration is counted, S4).
 
     ``skew_robust``: None (default) = autodetect — when the graph is
     large enough that a single node's adjacency could overwhelm one
@@ -479,6 +548,17 @@ def connected_components(
     if local_threshold is not None and n_edges <= local_threshold:
         import pyarrow as pa
 
+        # the local fixed point returns its pairs as an Arrow string
+        # table (S1); any other id type would die inside pyarrow with
+        # an opaque ArrowTypeError, so refuse it here by name
+        for field in edges.schema.fields[:2]:
+            if field.dataType.typeName() != "string":
+                raise TypeError(
+                    f"local_threshold needs string node ids (S1); edge "
+                    f"column {field.name!r} is "
+                    f"{field.dataType.simpleString()} — cast it to string "
+                    "or leave local_threshold unset"
+                )
         # Arrow at both driver boundaries (optimization round 13,
         # guide §6 "Arrow for driver transfers"): toArrow() replaces
         # the row-pickle collect and a pyarrow Table replaces the
@@ -562,129 +642,43 @@ def connected_components(
             iterate_fn = ccf_iterate
             path = "window"
 
-    # Size the loop's shuffles from the data, not from session
-    # defaults (see _loop_shuffle_partitions: sqrt-of-volume optimum
-    # under a per-partition memory cap). AQE's per-stage adaptive
-    # barriers cost ~0.5s/iteration, which dominates sub-second
-    # stages, so it is disabled while the loop runs SMALL graphs and
-    # left on (skew-join splitting, coalescing) at scale.
-    target = _loop_shuffle_partitions(n_edges)
-    small = target <= 64
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", str(target))
-    if small:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    if pairs.rdd.getNumPartitions() > target:
-        pairs = pairs.coalesce(target)
+    def step(p: DataFrame) -> DataFrame:
+        # NB: deduping physically between rounds is a MEASURED
+        # win over fusing the dedup into the next window pass
+        # (adjacent-duplicate lag filter, one shuffle/round):
+        # converging CC emits the same (node, min) pair from many
+        # groups, so the carried duplicate volume costs more than
+        # the saved exchange (500k probe: 10.9s -> 15.4s fused)
+        return iterate_fn(_carried(p))
 
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-        hadoop_delete as _hadoop_delete,
-    )
+    # size the loop's shuffles from the data, not from session
+    # defaults (_loop_shuffle_partitions: sqrt-of-volume optimum under
+    # a per-partition memory cap)
+    with _loop_shuffle_conf(
+        spark, lambda _session: _loop_shuffle_partitions(n_edges)
+    ) as target:
+        if pairs.rdd.getNumPartitions() > target:
+            pairs = pairs.coalesce(target)
+        # one barrier per iteration whose new-pair count is the single
+        # action: each iteration is ONE job (the reference runs two,
+        # and its Python variant re-executes the reduce phase in the
+        # second — SURVEY.md §3.1). Reliable mode trades that for
+        # executor-loss tolerance (see docstring).
+        final, iterations, converged, counts = fixed_point(
+            pairs,
+            step,
+            max_steps=max_iterations,
+            measure=lambda g: row_count(g.where(F.col(_NEW))),
+            converged=lambda _prev, new_pairs: new_pairs == 0,
+            reliable_dir=(
+                None
+                if reliable_checkpoint_dir is None
+                else f"{reliable_checkpoint_dir}/iter"
+            ),
+            on_iteration=_public_hook(on_iteration, "new_pairs"),
+        )
 
-    iterations = 0
-    converged = False
-    counts: list[int] = []
-    cycler = CheckpointCycler(spark)
-    prev_reliable_dir: str | None = None
-
-    try:
-        while iterations < max_iterations:
-            iterations += 1
-            it_t0 = time.perf_counter()
-
-            # lazy checkpoint + count: the count is the materializing
-            # action, so each iteration is ONE job (the reference runs
-            # two, and its Python variant re-executes the reduce phase
-            # in the second — SURVEY.md §3.1). Reliable mode trades
-            # that for executor-loss tolerance (see docstring).
-            stepped = iterate_fn(pairs)
-            if reliable_checkpoint_dir is not None:
-                # one subdirectory per iteration so superseded
-                # generations can be deleted by path. The barrier is a
-                # PARQUET WRITE + READBACK, not df.checkpoint(): RDD
-                # reliable checkpointing runs a SECOND job to write the
-                # files (ReliableCheckpointRDD recomputes the
-                # reduce-side sort+window after the count job — the
-                # classic unpersisted-checkpoint double execution) and
-                # stores java-serialized rows. The write-out executes
-                # the iteration exactly once and stores columnar
-                # snappy parquet (~4x smaller generations); measured
-                # 159 s -> 97 s for the 5M-edge reliable fixed point
-                # (round-10 verdict item 2). Recovery semantics are
-                # identical: the files survive executor loss and the
-                # readback truncates lineage. Schema passed explicitly
-                # so a converged 0-row generation still reads.
-                it_dir = f"{reliable_checkpoint_dir}/iter-{iterations:04d}"
-                stepped.write.mode("overwrite").parquet(it_dir)
-                combined = spark.read.schema(stepped.schema).parquet(
-                    it_dir
-                )
-            else:
-                combined = stepped.localCheckpoint(eager=False)
-            new_pair_count = combined.where(F.col(_NEW)).count()
-            counts.append(new_pair_count)
-
-            # iteration i's checkpoint blocks are garbage the moment
-            # iteration i+1 materializes (the count above): release
-            # them now instead of waiting for driver GC (see
-            # graph/checkpointing.py — pinned storage stays ~2
-            # iterations wide instead of growing with depth). Reliable
-            # mode has no pinned blocks — its generations are parquet
-            # directories, freed by the _hadoop_delete below.
-            if reliable_checkpoint_dir is None:
-                cycler.cycle(combined)
-            if on_iteration is not None:
-                info = {
-                    "iteration": iterations,
-                    "wall_sec": round(time.perf_counter() - it_t0, 3),
-                    "new_pairs": new_pair_count,
-                }
-                if reliable_checkpoint_dir is not None:
-                    info["checkpoint_dir"] = it_dir
-                    # Hadoop may render the URI as file:///p, file://p
-                    # or file:/p — parse rather than slice a fixed
-                    # prefix (a 7-char slice mangles file:/p and the
-                    # ckpt_mb diagnostic silently vanishes)
-                    if it_dir.startswith("file:"):
-                        from urllib.parse import urlparse
-
-                        local_dir = urlparse(it_dir).path
-                    else:
-                        local_dir = it_dir
-                    if os.path.isdir(local_dir):
-                        info["ckpt_mb"] = round(
-                            sum(
-                                os.path.getsize(os.path.join(dp, f))
-                                for dp, _, fs in os.walk(local_dir)
-                                for f in fs
-                            )
-                            / 1e6,
-                            1,
-                        )
-                on_iteration(info)
-            if reliable_checkpoint_dir is not None:
-                if prev_reliable_dir is not None:
-                    _hadoop_delete(spark, prev_reliable_dir)
-                prev_reliable_dir = it_dir
-
-            # NB: deduping physically between rounds is a MEASURED
-            # win over fusing the dedup into the next window pass
-            # (adjacent-duplicate lag filter, one shuffle/round):
-            # converging CC emits the same (node, min) pair from many
-            # groups, so the carried duplicate volume costs more than
-            # the saved exchange (500k probe: 10.9s -> 15.4s fused)
-            pairs = ccf_dedup(combined)
-
-            if new_pair_count == 0:
-                converged = True
-                break
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-
-    mapping = pairs.select(
+    mapping = _carried(final).select(
         F.col("src").alias("node"), F.col("dst").alias("component")
     )
     return CCFResult(

@@ -1,35 +1,55 @@
-"""Deterministic release of per-iteration localCheckpoint blocks.
+"""One fixed-point loop driver, and the release of its generations.
 
-Every iterative loop here follows the O9 discipline (one lazy/eager
-``localCheckpoint`` per round + one materializing action — see
-graph/ccf.py module docstring): lineage is truncated, so each round's
-blocks are the ONLY copy of that round's state. Spark's ContextCleaner
-frees them eventually — when the driver-side Python object is GC'd —
-but "eventually" means a 7-iteration loop retains 7 generations of
-blocks (measured: 1.4 GB on the 500k-edge CC probe; at 100 TB scale it
-is eviction churn or an executor OOM). The moment round i+1 is
-materialized, round i's blocks are garbage by construction; this
-module releases them at exactly that point.
+Every iterative operator in the engine (CCF and star connected
+components, the graph analytics loops, BPE training/encoding) is the
+same loop as the reference's CCF-Iterate -> CCF-Dedup cycle: chain a
+few lazy steps, place one barrier that pins the new state and
+truncates its lineage, run ONE materializing action on it (the
+convergence counter), release the previous generation, and stop on a
+convergence test or a step budget. ``fixed_point`` is that loop;
+callers supply only the step and the test::
 
-Ownership model: ``cycle(df, ...)`` takes the round's checkpointed
-DataFrame(s) and claims exactly the RDD ids that back them (the
-``LogicalRDD`` root a (local)checkpoint plan always has). The cycler
-therefore can never free a checkpoint it did not claim — concurrent
-queries, loop-invariant tables, and a caller's own persists on the
-same session are untouchable by construction. (Earlier rounds diffed
-the session-global registration map between cycles, which raced with
-concurrent persists; the round-3 verdict flagged it and this is the
-fix.)
+    state, steps, converged, measures = fixed_point(
+        pairs,
+        step,                              # lazy: state -> next state
+        max_steps=100,
+        measure=lambda g: row_count(g.where(new)),  # the one action
+        converged=lambda prev, cur: cur == 0,
+    )
+
+Generation release. The barrier is a lazy ``localCheckpoint``, so each
+round's blocks are the ONLY copy of that round's state. Spark's
+ContextCleaner frees them eventually — when the driver-side Python
+object is GC'd — but "eventually" means a 7-iteration loop retains 7
+generations of blocks (measured: 1.4 GB on the 500k-edge CC probe; at
+100 TB scale it is eviction churn or an executor OOM). The moment
+round i+1 is materialized, round i's blocks are garbage by
+construction; the driver's ``CheckpointCycler`` releases them at
+exactly that point. The generation the driver returns backs the
+caller's result and is never released by the loop.
+
+Ownership model: ``cycle(df, ...)`` claims exactly the RDD ids that
+back the given checkpointed DataFrame(s) (the ``LogicalRDD`` root a
+(local)checkpoint plan always has). The cycler therefore can never
+free a checkpoint it did not claim — concurrent queries, loop-invariant
+tables, and a caller's own persists on the same session are
+untouchable by construction. (Earlier rounds diffed the session-global
+registration map between cycles, which raced with concurrent persists;
+the round-3 verdict flagged it and this is the fix.)
 
 SAFETY: an unpersisted localCheckpoint CANNOT be recomputed (the
-lineage is gone), so ``cycle()`` must only be called when everything
-claimed by the previous ``cycle()`` call is truly dead: after the new
-round's materializing action, and only when the loop has committed to
-advancing (e.g. k-core's "no change" break returns the PREVIOUS round
-— its cycle() call sits inside the advance branch).
+lineage is gone), so a generation may only be released when
+everything that reads it has been materialized. The driver releases
+generation i only after generation i+1's measure ran; a loop that
+keeps its own scratch checkpoints (``release``) owes the same proof.
 """
 
 from __future__ import annotations
+
+import os
+import time
+from typing import Any, Callable
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -61,9 +81,9 @@ def checkpoint_rdd_ids(df: DataFrame) -> set[int]:
 def hadoop_delete(spark: SparkSession, path: str) -> None:
     """Recursively delete ``path`` through the Hadoop FileSystem API,
     so it works for local paths in tests AND for the HDFS/S3A URIs a
-    cluster run passes as ``reliable_checkpoint_dir``. Used by loops in
-    reliable-checkpoint mode to drop iteration i's files once
-    iteration i+1 has materialized (reliable checkpoints are
+    cluster run passes as ``reliable_checkpoint_dir``. Used by the
+    driver in reliable mode to drop generation i's files once
+    generation i+1 has materialized (reliable barriers are
     file-backed — the RDD persistence map knows nothing about them, so
     the block-release path can't free them). Best-effort: a missing
     path is fine."""
@@ -82,7 +102,7 @@ def _persistent_rdd_ids(spark: SparkSession) -> set[int]:
     """IDs of RDDs currently MARKED persistent (the registration map,
     which is populated at ``persist()``/``localCheckpoint()`` CALL
     time — before any block exists). Introspection/test helper; the
-    cycler itself no longer diffs this map (ownership model above)."""
+    cycler itself never diffs this map (ownership model above)."""
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     return {int(rid) for rid in jmap.keySet().toArray()}
 
@@ -101,11 +121,21 @@ def _unpersist_rdds(spark: SparkSession, ids: set[int]) -> None:
                 pass
 
 
+def release(*dfs: DataFrame) -> None:
+    """Release the checkpoint blocks behind ``dfs`` now. For scratch
+    checkpoints a loop pins outside the driver's generation (e.g. a
+    per-round oriented edge list); same SAFETY rule as the cycler."""
+    ids: set[int] = set()
+    for df in dfs:
+        ids |= checkpoint_rdd_ids(df)
+    _unpersist_rdds(dfs[0].sparkSession, ids)
+
+
 class CheckpointCycler:
     """Tracks checkpoint generations for one loop and frees the
-    previous generation each time the loop advances.
-
-    Usage::
+    previous generation each time the loop advances. ``fixed_point``
+    owns one per run; loops the driver cannot take (two generation
+    tracks, a stream fold) use it directly::
 
         cycler = CheckpointCycler(spark)
         while ...:
@@ -120,12 +150,11 @@ class CheckpointCycler:
     structurally out of reach (no shared-session hazard; pinned by
     ``tests/test_checkpointing.py``). The final generation is never
     released either (the loop returns without a further ``cycle()``);
-    it backs the result and stays for the ContextCleaner.
+    it backs the result.
 
-    Multi-state loops (e.g. BFS's frontier+visited) pass every
-    checkpointed DataFrame of the round in one call; the whole set is
-    freed together when the next round claims its set. Ids appearing
-    in both generations are kept.
+    Multi-state loops pass every checkpointed DataFrame of the round
+    in one call; the whole set is freed together when the next round
+    claims its set. Ids appearing in both generations are kept.
     """
 
     def __init__(self, spark: SparkSession) -> None:
@@ -145,3 +174,123 @@ class CheckpointCycler:
         if self.prev:
             _unpersist_rdds(self.spark, self.prev - new_ids)
         self.prev = new_ids
+
+
+def _dir_mb(path: str) -> float | None:
+    """On-disk MB under ``path`` when it is a visible local directory.
+    Hadoop may render the URI as file:///p, file://p or file:/p —
+    parse rather than slice a fixed prefix (a 7-char slice mangles
+    file:/p and the diagnostic silently vanishes)."""
+    local = urlparse(path).path if path.startswith("file:") else path
+    if not os.path.isdir(local):
+        return None
+    return round(
+        sum(
+            os.path.getsize(os.path.join(dp, f))
+            for dp, _, fs in os.walk(local)
+            for f in fs
+        )
+        / 1e6,
+        1,
+    )
+
+
+def row_count(df: DataFrame) -> int:
+    """``df``'s row count as exactly ONE Spark job: counts the
+    physical plan's row RDD directly, which is what an eager
+    ``localCheckpoint`` does. ``DataFrame.count()`` plans a global
+    aggregate instead, and under AQE that aggregate's shuffle-map
+    stage runs as a job of its own (two jobs per barrier)."""
+    return int(df._jdf.queryExecution().toRdd().count())
+
+
+def fixed_point(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    *,
+    max_steps: int,
+    barrier_every: int = 1,
+    measure: Callable[[DataFrame], Any] = row_count,
+    converged: Callable[[Any, Any], bool] | None = None,
+    reliable_dir: str | None = None,
+    on_iteration: Callable[[dict], None] | None = None,
+) -> tuple[DataFrame, int, bool, list]:
+    """Iterate ``step`` from ``state`` to a fixed point or a budget.
+
+    Each round chains ``barrier_every`` lazy ``step`` calls (capped by
+    the remaining ``max_steps``), then places ONE barrier: a lazy
+    ``localCheckpoint``, or — with ``reliable_dir`` — a parquet write
+    plus readback into ``{reliable_dir}-NNNN`` (NNNN = steps done).
+    ``measure(barrier)`` is the round's single materializing action,
+    so it must touch every partition (``row_count`` of the barrier or
+    a slice of it, or an aggregate; a ``take(1)`` would pin only the
+    partitions it read).
+    ``converged(prev, cur)`` compares the previous round's measure
+    (``None`` on the first round) with this one's; without it the loop
+    runs the whole budget.
+
+    After the measure the previous generation is released (blocks, or
+    the previous reliable directory), and ``on_iteration`` receives
+    ``{"iteration": steps done, "wall_sec", "measure"}`` plus, in
+    reliable mode, ``"checkpoint_dir"`` and (local paths only)
+    ``"ckpt_mb"``. Hooks are diagnostics; exceptions propagate.
+
+    Returns ``(state, steps, converged, measures)``: the last
+    materialized generation (``state`` itself if the budget is 0),
+    the number of steps applied, whether ``converged`` fired, and the
+    measure of every round.
+    """
+    spark = state.sparkSession
+    cycler = CheckpointCycler(spark)
+    steps = 0
+    measures: list = []
+    prev_dir: str | None = None
+    while steps < max_steps:
+        t0 = time.perf_counter()
+        nxt = state
+        for _ in range(min(barrier_every, max_steps - steps)):
+            nxt = step(nxt)
+            steps += 1
+        if reliable_dir is None:
+            state = nxt.localCheckpoint(eager=False)
+        else:
+            # parquet write + readback, not df.checkpoint(): RDD
+            # reliable checkpointing runs a SECOND job to write its
+            # files (ReliableCheckpointRDD recomputes the reduce side
+            # after the action — the unpersisted-checkpoint double
+            # execution) and stores java-serialized rows. The
+            # write-out executes the round once and stores columnar
+            # snappy parquet (~4x smaller generations); measured
+            # 159 s -> 97 s for the 5M-edge reliable CCF fixed point.
+            # Recovery semantics are identical: the files survive
+            # executor loss and the readback truncates lineage.
+            # Schema passed so a converged 0-row generation still reads.
+            gen_dir = f"{reliable_dir}-{steps:04d}"
+            nxt.write.mode("overwrite").parquet(gen_dir)
+            state = spark.read.schema(nxt.schema).parquet(gen_dir)
+        cur = measure(state)
+        if reliable_dir is None:
+            cycler.cycle(state)
+        if on_iteration is not None:
+            info = {
+                "iteration": steps,
+                "wall_sec": round(time.perf_counter() - t0, 3),
+                "measure": cur,
+            }
+            if reliable_dir is not None:
+                info["checkpoint_dir"] = gen_dir
+                mb = _dir_mb(gen_dir)
+                if mb is not None:
+                    info["ckpt_mb"] = mb
+            on_iteration(info)
+        if reliable_dir is not None:
+            if prev_dir is not None:
+                hadoop_delete(spark, prev_dir)
+            prev_dir = gen_dir
+        done = converged is not None and converged(
+            measures[-1] if measures else None, cur
+        )
+        measures.append(cur)
+        if done:
+            return state, steps, True, measures
+    return state, steps, False, measures

@@ -34,14 +34,18 @@ point every edge is (node, component-min).
 
 from __future__ import annotations
 
-import os
-from urllib.parse import urlparse
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .ccf import CCFResult, _undirected
+from .ccf import (
+    CCFResult,
+    _loop_shuffle_conf,
+    _loop_shuffle_partitions,
+    _public_hook,
+    _undirected,
+)
+from .checkpointing import fixed_point
 
 MAX_ROUNDS = 50
 
@@ -133,28 +137,12 @@ def connected_components_star(
     ``pairs`` (the canonical edge-set size, the bounded-intermediate
     metric) instead of CCF's ``new_pairs`` emission counter.
     """
-    import time
-
     spark = edges.sparkSession
     pairs = edges.select(
         F.col(edges.columns[0]).alias("src"),
         F.col(edges.columns[1]).alias("dst"),
     )
-
-    from map_reduce_project_spark.graph.ccf import (
-        _loop_shuffle_partitions,
-    )
-
     n_edges = n_edges_hint if n_edges_hint is not None else pairs.count()
-    target = _loop_shuffle_partitions(n_edges)
-    small = target <= 64
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", str(target))
-    if small:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    if pairs.rdd.getNumPartitions() > target:
-        pairs = pairs.coalesce(target)
 
     def fingerprint(df: DataFrame):
         """(row_count, exact decimal sum of per-row xxhash64) — an
@@ -172,79 +160,31 @@ def connected_components_star(
         ).collect()[0]
         return row["n"], row["h"]
 
-    rounds = 0
-    converged = False
-    changes: list[int] = []
-    prev_fp = None
-    prev_reliable_dir: str | None = None
-
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-        hadoop_delete as _hadoop_delete,
-    )
-
-    cycler = CheckpointCycler(spark)
-
-    try:
-        while rounds < max_rounds:
-            rounds += 1
-            it_t0 = time.perf_counter()
-            stepped = small_star(large_star(pairs)).dropDuplicates(
+    with _loop_shuffle_conf(
+        spark, lambda _session: _loop_shuffle_partitions(n_edges)
+    ) as target:
+        if pairs.rdd.getNumPartitions() > target:
+            pairs = pairs.coalesce(target)
+        # the final round survives as the result; the reliable mode is
+        # the same parquet write+readback barrier as the CCF loop
+        pairs, rounds, converged, fps = fixed_point(
+            pairs,
+            lambda p: small_star(large_star(p)).dropDuplicates(
                 ["src", "dst"]
-            )
-            if reliable_checkpoint_dir is not None:
-                # same parquet write+readback barrier as the CCF loop
-                # (graph/ccf.py): one execution per round, columnar
-                # generations, files survive executor loss
-                it_dir = f"{reliable_checkpoint_dir}/round-{rounds:04d}"
-                stepped.write.mode("overwrite").parquet(it_dir)
-                nxt = spark.read.schema(stepped.schema).parquet(it_dir)
-            else:
-                nxt = stepped.localCheckpoint(eager=False)
-            fp = fingerprint(nxt)
-            pairs = nxt
-            # round r-1's checkpoint is dead once round r is
-            # materialized (fingerprint above); round r survives as
-            # the result if we break below
-            if reliable_checkpoint_dir is None:
-                cycler.cycle(pairs)
-            if on_iteration is not None:
-                info = {
-                    "iteration": rounds,
-                    "wall_sec": round(time.perf_counter() - it_t0, 3),
-                    "pairs": fp[0],
-                }
-                if reliable_checkpoint_dir is not None:
-                    info["checkpoint_dir"] = it_dir
-                    local_dir = (
-                        urlparse(it_dir).path
-                        if it_dir.startswith("file:")
-                        else it_dir
-                    )
-                    if os.path.isdir(local_dir):
-                        info["ckpt_mb"] = round(
-                            sum(
-                                os.path.getsize(os.path.join(dp, f))
-                                for dp, _, fs in os.walk(local_dir)
-                                for f in fs
-                            )
-                            / 1e6,
-                            1,
-                        )
-                on_iteration(info)
-            if reliable_checkpoint_dir is not None:
-                if prev_reliable_dir is not None:
-                    _hadoop_delete(spark, prev_reliable_dir)
-                prev_reliable_dir = it_dir
-            if fp == prev_fp:
-                converged = True
-                changes.append(0)
-                break
-            changes.append(1)
-            prev_fp = fp
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+            ),
+            max_steps=max_rounds,
+            measure=fingerprint,
+            converged=lambda prev, cur: cur == prev,
+            reliable_dir=(
+                None
+                if reliable_checkpoint_dir is None
+                else f"{reliable_checkpoint_dir}/round"
+            ),
+            on_iteration=_public_hook(
+                on_iteration, "pairs", lambda fp: fp[0]
+            ),
+        )
+    changes = [int(cur != prev) for prev, cur in zip([None] + fps, fps)]
 
     mapping = pairs.select(
         F.col("src").alias("node"), F.col("dst").alias("component")

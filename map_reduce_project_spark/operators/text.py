@@ -1034,88 +1034,107 @@ def bpe_train(
     Returns one row per learned merge:
     (merge_rank, lhs, rhs, merged, pair_count).
     """
-    from pyspark.sql.window import Window
-
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
+    from map_reduce_project_spark.graph.checkpointing import fixed_point
 
     spark = docs.sparkSession
-    tok = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "tok"),
-    )
-
-    w_doc = Window.partitionBy("doc_id").orderBy("pos")
-    cycler = CheckpointCycler(spark)
+    tok = _bpe_tokens(docs, id_col, text_col)
     merges = []
-    for rank in range(1, n_merges + 1):
-        pairs = tok.withColumn("nxt", F.lead("tok").over(w_doc)).where(
-            F.col("nxt").isNotNull()
-        )
-        best_row = (
-            pairs.groupBy("tok", "nxt")
-            .agg(F.count("*").alias("c"))
-            .orderBy(F.col("c").desc(), "tok", "nxt")
-            .limit(1)
-            .collect()
-        )
-        if not best_row:
-            break
-        left, right, cnt = best_row[0]
-        merges.append((rank, left, right, left + right, cnt))
+    best = _bpe_best_pair(tok)
 
-        is_match = (F.col("tok") == left) & (F.col("nxt") == right)
-        marked = pairs.select(
-            "doc_id", "pos", "tok", "nxt", is_match.alias("m")
-        )
-        w_runs = Window.partitionBy("doc_id").orderBy("pos")
-        matches = (
-            marked.where("m")
-            .withColumn(
-                "grp", F.col("pos") - F.row_number().over(w_runs)
-            )
-            .withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("doc_id", "grp").orderBy("pos")
-                ),
-            )
-            .where(F.col("rn") % 2 == 1)
-            .select("doc_id", F.col("pos").alias("mpos"))
-        )
-        tok = (
-            tok.join(
-                matches.selectExpr("doc_id", "mpos as pos", "1 as _merge"),
-                ["doc_id", "pos"],
-                "left",
-            )
-            .join(
-                matches.selectExpr(
-                    "doc_id", "mpos + 1 as pos", "1 as _drop"
-                ),
-                ["doc_id", "pos"],
-                "left",
-            )
-            .where(F.col("_drop").isNull())
-            .withColumn(
-                "tok",
-                F.when(
-                    F.col("_merge") == 1,
-                    F.concat(F.col("tok"), F.lit(right)),
-                ).otherwise(F.col("tok")),
-            )
-            .withColumn("pos", F.row_number().over(w_doc) - 1)
-            .select("doc_id", "pos", "tok")
-        ).localCheckpoint(eager=True)
-        # round r-1's token table is dead once round r's is
-        # materialized (O9 discipline, ownership-scoped release)
-        cycler.cycle(tok)
+    def merge(tok: DataFrame) -> DataFrame:
+        left, right, cnt = best
+        merges.append((len(merges) + 1, left, right, left + right, cnt))
+        return _bpe_splice(tok, left, right)
 
+    def next_pair(tok: DataFrame):
+        # the next round's argmax is the aggregate that materializes
+        # this round's token table: one action per merge
+        nonlocal best
+        best = _bpe_best_pair(tok)
+        return best
+
+    fixed_point(
+        tok,
+        merge,
+        max_steps=n_merges if best is not None else 0,
+        measure=next_pair,
+        converged=lambda _prev, nxt: nxt is None,
+    )
     return spark.createDataFrame(
         merges,
         "merge_rank long, lhs string, rhs string, merged string, "
         "pair_count long",
+    )
+
+
+def _bpe_tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(doc_id, pos, tok): whitespace tokens with their positions."""
+    return docs.select(
+        F.col(id_col).alias("doc_id"),
+        F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "tok"),
+    )
+
+
+def _bpe_best_pair(tok: DataFrame):
+    """The most frequent adjacent pair as (left, right, count) —
+    count desc, then left/right asc — or None when no doc has two
+    tokens left."""
+    from pyspark.sql.window import Window
+
+    w_doc = Window.partitionBy("doc_id").orderBy("pos")
+    best_row = (
+        tok.withColumn("nxt", F.lead("tok").over(w_doc))
+        .where(F.col("nxt").isNotNull())
+        .groupBy("tok", "nxt")
+        .agg(F.count("*").alias("c"))
+        .orderBy(F.col("c").desc(), "tok", "nxt")
+        .limit(1)
+        .collect()
+    )
+    return tuple(best_row[0]) if best_row else None
+
+
+def _bpe_splice(tok: DataFrame, left: str, right: str) -> DataFrame:
+    """Apply one merge GREEDY-LEFTMOST: overlapping matches form runs
+    and the odd ranks within each run (gaps-and-islands grouping) are
+    the non-overlapping leftmost set; consumed positions drop, the
+    pair concatenates, and pos is re-densified."""
+    from pyspark.sql.window import Window
+
+    w_doc = Window.partitionBy("doc_id").orderBy("pos")
+    matches = (
+        tok.withColumn("nxt", F.lead("tok").over(w_doc))
+        .where((F.col("tok") == left) & (F.col("nxt") == right))
+        .withColumn("grp", F.col("pos") - F.row_number().over(w_doc))
+        .withColumn(
+            "rn",
+            F.row_number().over(
+                Window.partitionBy("doc_id", "grp").orderBy("pos")
+            ),
+        )
+        .where(F.col("rn") % 2 == 1)
+        .select("doc_id", F.col("pos").alias("mpos"))
+    )
+    return (
+        tok.join(
+            matches.selectExpr("doc_id", "mpos as pos", "1 as _merge"),
+            ["doc_id", "pos"],
+            "left",
+        )
+        .join(
+            matches.selectExpr("doc_id", "mpos + 1 as pos", "1 as _drop"),
+            ["doc_id", "pos"],
+            "left",
+        )
+        .where(F.col("_drop").isNull())
+        .withColumn(
+            "tok",
+            F.when(
+                F.col("_merge") == 1, F.concat(F.col("tok"), F.lit(right))
+            ).otherwise(F.col("tok")),
+        )
+        .withColumn("pos", F.row_number().over(w_doc) - 1)
+        .select("doc_id", "pos", "tok")
     )
 
 
@@ -1131,57 +1150,18 @@ def bpe_apply(
     (doc_id, n_tokens_before, n_tokens_after): the compression the
     learned vocabulary buys on this corpus — the number every
     tokenizer-training run reports."""
-    from pyspark.sql.window import Window
+    from map_reduce_project_spark.graph.checkpointing import fixed_point
 
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
-    tok = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "tok"),
-    )
-    w_doc = Window.partitionBy("doc_id").orderBy("pos")
+    tok = _bpe_tokens(docs, id_col, text_col)
     before = tok.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_tokens_before")
     )
-    cycler = CheckpointCycler(docs.sparkSession)
-    for left, right in merges:
-        pairs = tok.withColumn("nxt", F.lead("tok").over(w_doc))
-        matches = (
-            pairs.where((F.col("tok") == left) & (F.col("nxt") == right))
-            .withColumn("grp", F.col("pos") - F.row_number().over(w_doc))
-            .withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("doc_id", "grp").orderBy("pos")
-                ),
-            )
-            .where(F.col("rn") % 2 == 1)
-            .select("doc_id", F.col("pos").alias("mpos"))
-        )
-        tok = (
-            tok.join(
-                matches.selectExpr("doc_id", "mpos as pos", "1 as _merge"),
-                ["doc_id", "pos"],
-                "left",
-            )
-            .join(
-                matches.selectExpr("doc_id", "mpos + 1 as pos", "1 as _drop"),
-                ["doc_id", "pos"],
-                "left",
-            )
-            .where(F.col("_drop").isNull())
-            .withColumn(
-                "tok",
-                F.when(
-                    F.col("_merge") == 1, F.concat(F.col("tok"), F.lit(right))
-                ).otherwise(F.col("tok")),
-            )
-            .withColumn("pos", F.row_number().over(w_doc) - 1)
-            .select("doc_id", "pos", "tok")
-        ).localCheckpoint(eager=True)
-        cycler.cycle(tok)
+    pending = iter(merges)
+    tok = fixed_point(
+        tok,
+        lambda t: _bpe_splice(t, *next(pending)),
+        max_steps=len(merges),
+    )[0]
     after = tok.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_tokens_after")
     )
@@ -1360,8 +1340,7 @@ def unigram_train(
     Output: one row per distinct word after the final round:
     (word, wfreq, n_pieces, seg, score) with seg '|'-joined.
     """
-    from pyspark.sql.window import Window
-
+    from map_reduce_project_spark.graph.ccf import _loop_shuffle_conf
     from map_reduce_project_spark.graph.checkpointing import (
         CheckpointCycler,
     )
@@ -1431,16 +1410,14 @@ def unigram_train(
     # Size partitions from the MEASURED subs cardinality (~50k rows
     # per task), never above the session value — a 100M-word crawl
     # vocabulary keeps full parallelism, a demo vocabulary stops
-    # paying 32 task launches per tiny job. Restored in the finally.
-    _sp_key = "spark.sql.shuffle.partitions"
-    _sp_prev = spark.conf.get(_sp_key)
-    dp_parts = max(
-        1,
-        min(int(_sp_prev), -(-subs.count() // 50_000)),
-    )
-    best = None
-    spark.conf.set(_sp_key, str(dp_parts))
-    try:
+    # paying 32 task launches per tiny job. Restored on exit; AQE is
+    # left as the session has it.
+    n_subs = subs.count()
+    with _loop_shuffle_conf(
+        spark,
+        lambda session_sp: max(1, min(session_sp, -(-n_subs // 50_000))),
+        aqe_off_when_small=False,
+    ):
         best = _unigram_dp_rounds(
             spark,
             words,
@@ -1451,8 +1428,6 @@ def unigram_train(
             step_cycler,
             round_cycler,
         )
-    finally:
-        spark.conf.set(_sp_key, _sp_prev)
     return best.join(words.select("word", "wfreq"), "word").select(
         "word",
         F.col("wfreq").cast("long").alias("wfreq"),

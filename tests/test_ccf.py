@@ -17,6 +17,13 @@ from map_reduce_project_spark.graph import (
     generate_cluster_graph,
     generate_random_graph,
 )
+from map_reduce_project_spark.graph.analytics import (
+    bfs_hops,
+    k_core,
+    label_propagation,
+    pagerank_int,
+    sssp_int,
+)
 from map_reduce_project_spark.graph.generators import edges_df
 
 # Paper Figure 5 worked example (reference ccf_connected_components.py:249-257)
@@ -215,25 +222,107 @@ def test_skew_robust_fixed_point(spark):
     assert a.iterations == b.iterations
 
 
-def test_loop_releases_checkpoint_blocks(spark):
-    # the loop must not retain one checkpoint generation per
-    # iteration: after convergence at most the final generation (plus
-    # anything persisted before the loop) may remain — the per-round
-    # blocks are freed by CheckpointCycler the moment the next round
-    # materializes (graph/checkpointing.py)
+def _chain(spark, n):
+    return edges_df(spark, generate_chain_graph(n))
+
+
+def _chain_with_triangle(spark, n):
+    # a tail of n nodes hanging off a triangle: the 2-core peels one
+    # tail node per round and keeps the triangle
+    edges = generate_chain_graph(n) + [
+        (str(n - 1), "t1"), ("t1", "t2"), ("t2", str(n - 1))
+    ]
+    return edges_df(spark, edges)
+
+
+def _weighted_chain(spark, n):
+    return spark.createDataFrame(
+        [(str(i), str(i + 1), 1 + i % 3) for i in range(n - 1)],
+        "src string, dst string, w long",
+    )
+
+
+def _seed_nodes(spark, *nodes):
+    return spark.createDataFrame([(x,) for x in nodes], "node string")
+
+
+# each loop at a short and a long depth: (run(spark, depth), depths)
+_RESIDUE_LOOPS = {
+    "ccf": (lambda s, n: connected_components(_chain(s, n)).mapping,
+            (5, 40)),
+    "star": (lambda s, n: connected_components(
+        _chain(s, n), algorithm="star").mapping, (5, 40)),
+    "pagerank_int": (lambda s, n: pagerank_int(_chain(s, 30), n), (1, 8)),
+    "label_propagation": (
+        lambda s, n: label_propagation(_chain(s, 30), n), (1, 8)),
+    "bfs_hops": (lambda s, n: bfs_hops(
+        _chain(s, 30), _seed_nodes(s, "0"), max_hops=n), (2, 20)),
+    "k_core": (lambda s, n: k_core(_chain_with_triangle(s, n), 2), (3, 15)),
+    "sssp_int": (lambda s, n: sssp_int(
+        _weighted_chain(s, n), _seed_nodes(s, "0", "1", "2")), (4, 16)),
+}
+
+
+@pytest.mark.parametrize("loop", sorted(_RESIDUE_LOOPS))
+def test_loop_releases_checkpoint_blocks(spark, loop):
+    # a loop must not retain one checkpoint generation per iteration:
+    # the RDDs it leaves registered (its final generation plus
+    # loop-invariant pins such as pagerank's adjacency and degrees)
+    # must not grow with depth — superseded generations are released
+    # by the fixed-point driver the moment the next one materializes
+    # (graph/checkpointing.py). JVM GC can only lower a count, so the
+    # long run may show fewer, never more.
     from map_reduce_project_spark.graph.checkpointing import (
         _persistent_rdd_ids,
     )
 
-    before = _persistent_rdd_ids(spark)
-    edges = edges_df(spark, generate_chain_graph(40))  # multi-iteration
-    res = connected_components(edges)
-    assert res.iterations >= 3
-    leaked = _persistent_rdd_ids(spark) - before
-    # final generation = one checkpointed RDD backing res.mapping
-    assert len(leaked) <= 1
-    # and the result is still readable after all the unpersists
-    assert res.mapping.count() == 39
+    run, depths = _RESIDUE_LOOPS[loop]
+    left = {}
+    for depth in depths:
+        before = _persistent_rdd_ids(spark)
+        result = run(spark, depth)
+        left[depth] = len(_persistent_rdd_ids(spark) - before)
+        # the result is still readable after all the releases
+        result.count()
+    short, deep = depths
+    assert left[deep] <= left[short], left
+
+
+def _fake_session_partitions(monkeypatch, value):
+    # the session refuses a non-integer spark.sql.shuffle.partitions
+    # at set time, so serve one from the conf reader instead
+    from pyspark.sql.conf import RuntimeConfig
+
+    real_get = RuntimeConfig.get
+
+    def get(self, key, *args, **kwargs):
+        if key == "spark.sql.shuffle.partitions":
+            return value
+        return real_get(self, key, *args, **kwargs)
+
+    monkeypatch.setattr(RuntimeConfig, "get", get)
+
+
+def test_non_numeric_shuffle_partitions_fail_loudly(spark, monkeypatch):
+    edges = _chain(spark, 5)
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    before = {k: spark.conf.get(k) for k in keys}
+    _fake_session_partitions(monkeypatch, "auto")
+    with pytest.raises(ValueError, match="spark.sql.shuffle.partitions"):
+        connected_components(edges)
+    monkeypatch.undo()
+    # nothing was changed before the refusal
+    assert {k: spark.conf.get(k) for k in keys} == before
+
+
+def test_loop_restores_session_conf(spark):
+    before = {
+        k: spark.conf.get(k)
+        for k in ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    }
+    connected_components(_chain(spark, 5))
+    connected_components(_chain(spark, 5), algorithm="star")
+    assert {k: spark.conf.get(k) for k in before} == before
 
 
 def test_reliable_checkpoint_mode_matches_default(spark, tmp_path):
@@ -273,13 +362,18 @@ def test_reliable_checkpoint_mode_matches_default(spark, tmp_path):
     assert (not opt.isDefined()) or "/iter-" not in opt.get()
 
 
-def test_reliable_checkpoint_depth_stays_one_generation(spark, tmp_path):
+@pytest.mark.parametrize(
+    "algorithm,gen_prefix,min_depth", [("ccf", "iter", 8), ("star", "round", 5)]
+)
+def test_reliable_checkpoint_depth_stays_one_generation(
+    spark, tmp_path, algorithm, gen_prefix, min_depth
+):
     # the invariant that keeps a multi-hour 100 TB run from filling
     # the checkpoint store, pinned AT DEPTH: a long chain forces ~11
-    # iterations, and a sampler thread watches the directory the
-    # whole time — at most TWO generations may coexist (iteration
-    # i+1 materializes before iteration i is deleted), and exactly
-    # one survives the loop
+    # CCF iterations (star: ~log2 n rounds), and a sampler thread
+    # watches the directory the whole time — at most TWO generations
+    # may coexist (iteration i+1 materializes before iteration i is
+    # deleted), and exactly one survives the loop
     import os
     import threading
     import time as _time
@@ -295,7 +389,7 @@ def test_reliable_checkpoint_depth_stays_one_generation(spark, tmp_path):
             gens = {
                 os.path.relpath(dp, ckpt).split(os.sep)[0]
                 for dp, _, fs in os.walk(ckpt)
-                if fs and "/iter-" in dp
+                if fs and f"/{gen_prefix}-" in dp
             }
             peak["gens"] = max(peak["gens"], len(gens))
             _time.sleep(0.02)
@@ -303,11 +397,13 @@ def test_reliable_checkpoint_depth_stays_one_generation(spark, tmp_path):
     t = threading.Thread(target=sample, daemon=True)
     t.start()
     try:
-        res = connected_components(edges, reliable_checkpoint_dir=ckpt)
+        res = connected_components(
+            edges, reliable_checkpoint_dir=ckpt, algorithm=algorithm
+        )
     finally:
         stop.set()
         t.join(timeout=5)
-    assert res.converged and res.iterations >= 8, res.iterations
+    assert res.converged and res.iterations >= min_depth, res.iterations
     assert peak["gens"] >= 1, "sampler never saw a live generation"
     assert peak["gens"] <= 2, (
         f"{peak['gens']} checkpoint generations coexisted — superseded "
@@ -318,7 +414,7 @@ def test_reliable_checkpoint_depth_stays_one_generation(spark, tmp_path):
         for dp, _, fs in os.walk(ckpt)
         if fs
     }
-    assert live == {f"iter-{res.iterations:04d}"}
+    assert live == {f"{gen_prefix}-{res.iterations:04d}"}
     assert res.mapping.count() == 1199
 
 

@@ -65,6 +65,15 @@ def test_local_empty_graph(spark):
     assert res.mapping.columns == ["node", "component"]
 
 
+def test_local_path_rejects_non_string_ids(spark):
+    # S1 ids are strings; long ids routed through the local path must
+    # fail with a TypeError that names the column and its type, not
+    # an opaque ArrowTypeError from the result table
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "a long, b long")
+    with pytest.raises(TypeError, match="'a' is bigint"):
+        connected_components(edges, local_threshold=10)
+
+
 def test_skew_autodetect_star_graph(spark):
     # star: 1 hub ("0") with 3000 spokes — the 1-hub/1M-spokes shape at
     # reduced scale. With a reduced degree threshold the autodetect

@@ -102,8 +102,8 @@ def test_minhash_fused_collapse_exact_is_pair_identical(spark):
         (11, "one two"),                # ...duplicated (still shingles)
         (20, ""),                       # empty texts: one '' shingle
         (21, ""),
-        (30, None),                     # null group: no shingles,
-        (31, None),                     # must emit NO pairs
+        (30, None),                     # null texts shingle to ['']
+        (31, None),                     # and pair at jaccard 1.0
         (40, "q r s t u v w x y z a b"),
         (41, "q r s t u v w x y z a b"),
         (42, "q r s t u v w x y z a b"),
@@ -2694,6 +2694,29 @@ def test_unigram_train_matches_python_reference(spark):
         }
         want = _unigram_train_py(texts, n_rounds=2, max_piece_len=4)
         assert got == want, (seed, got, want)
+
+
+def test_unigram_train_rejects_non_numeric_shuffle_partitions(
+    spark, monkeypatch
+):
+    # the DP sizes its partitions from the session value, so a
+    # non-integer one must fail naming the conf key (not a bare int()
+    # ValueError)
+    from pyspark.sql.conf import RuntimeConfig
+
+    from map_reduce_project_spark.operators.text import unigram_train
+
+    df = spark.createDataFrame([("ab abc b",)], "text string")
+    real_get = RuntimeConfig.get
+
+    def get(self, key, *args, **kwargs):
+        if key == "spark.sql.shuffle.partitions":
+            return "auto"
+        return real_get(self, key, *args, **kwargs)
+
+    monkeypatch.setattr(RuntimeConfig, "get", get)
+    with pytest.raises(ValueError, match="spark.sql.shuffle.partitions"):
+        unigram_train(df, n_rounds=1)
 
 
 def test_unigram_train_empty_and_long_words(spark):

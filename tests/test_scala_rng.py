@@ -9,6 +9,7 @@ to the distributed loop in test_ccf_local.py). No Spark needed."""
 from __future__ import annotations
 
 import csv
+import os
 
 import pytest
 
@@ -24,6 +25,20 @@ SCALA_CSV = "/root/reference/experiment_results_scala.csv"
 
 
 def _published():
+    # the published result set ships with the reference checkout, not
+    # with this package: without it the 34 parity cases are skipped
+    # (one visible skip with the reason), never silently dropped
+    if not os.path.exists(SCALA_CSV):
+        return [
+            pytest.param(
+                None,
+                id="published-csv-absent",
+                marks=pytest.mark.skip(
+                    reason=f"{SCALA_CSV} not present: the reference's "
+                    "published Scala results are needed for parity"
+                ),
+            )
+        ]
     with open(SCALA_CSV) as f:
         return list(csv.DictReader(f))
 
@@ -54,6 +69,7 @@ def test_scala_random_graph_shape():
 
 @pytest.mark.parametrize("row", _published(), ids=lambda r: (
     f"{r['experiment']}-{r['nodes']}-{r['edges']}-{r['algorithm']}"
+    if r else None
 ))
 def test_scala_sweep_parity(row):
     exp = row["experiment"]
